@@ -122,26 +122,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // explicit AQE skew posture — the 100 TB conf recipe (SCALE.md):
-      // spatial-cell and LSH-band shuffle keys are skewed by nature
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      // codegen class cache sized for a many-operator pipeline (default 100
-      // entries thrashes: one heavy query generates ~100+ classes, so every
-      // execution recompiled them and each Janino compile serializes all
-      // concurrent tasks of the stage on the compile-cache KeyLock -- 32-
-      // thread dumps read ~19/32 task threads BLOCKED there; see
-      // OPTIMIZATION_r22.md)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.BboxFastPath.install(spark)
+    val spark = GraftSession(cpus.toInt)
     // local-iteration hooks (driver never sets these): run only named
     // queries, optionally several times (last timing wins = warm numbers)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

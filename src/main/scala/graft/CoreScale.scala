@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Core-count scaling evidence (r21 verdict #7): the sf0.1 bench is too
@@ -20,23 +20,12 @@ object CoreScale {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = args.headOption.map(_.toInt).getOrElse(16)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // =cpus, NOT the recipe's 2-3x: measured at 256x/32c, 3x partitions
-      // inflated summed task time 364->1509 s (more map-side shuffle files
-      // per task and 3x the blocks through the single local BlockManager)
-      // and wall 21->60 s — the recipe's sizing is for a CLUSTER where the
-      // block count spreads over many executor JVMs
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.BboxFastPath.install(spark)
+    // partitions = cpus, NOT the recipe's 2-3x: measured at 256x/32c, 3x
+    // partitions inflated summed task time 364->1509 s (more map-side
+    // shuffle files per task and 3x the blocks through the single local
+    // BlockManager) and wall 21->60 s — the recipe's sizing is for a
+    // CLUSTER where the block count spreads over many executor JVMs
+    val spark = GraftSession(cpus.toInt)
 
     def docs(): DataFrame =
       Scale.replicate(spark.read.parquet(s"$sf/documents.parquet"), mult, Seq("doc_id"))

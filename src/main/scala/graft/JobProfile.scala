@@ -1,10 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
-/** Per-stage wall/task-time profile of one declared query — the
-  * measurement companion to PlanDump (guide §1/§7: decide whether time
-  * goes to scheduling, shuffle or compute before touching anything).
+/** Per-stage wall/task-time profile of one declared query: decides
+  * whether time goes to scheduling, shuffle or compute before touching
+  * anything.
   * Usage: runMain graft.JobProfile <sfDir> <query> [reps] */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -12,19 +11,7 @@ object JobProfile {
     val qname = args(1)
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      // default-100 codegen cache thrashes on many-operator plans (Bench note)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.BboxFastPath.install(spark)
+    val spark = GraftSession(cpus.toInt)
 
     case class St(var name: String = "", var submitted: Long = 0,
                   var completed: Long = 0, var tasks: Int = 0,

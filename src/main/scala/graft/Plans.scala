@@ -3,7 +3,6 @@ package graft
 import graft.api.GeoDataFrame
 import graft.functions.GeoFunctions._
 import graft.join.SpatialJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dumps the physical plans of headline operators to PLANS.md — the
@@ -13,12 +12,8 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = new StringBuilder
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // the sections install the rules they show, so none are installed here
+    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def section(title: String, note: String)(df: => org.apache.spark.sql.DataFrame): Unit = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal: replicates the sf0.1 tables N× (ids shifted so keys stay
@@ -58,13 +58,15 @@ constant in core count by construction.
 
 ## 100 TB cluster conf recipe
 
-The engine's mains (Bench/Verify/Scale) set these explicitly; a cluster
-deployment should carry them over and scale the sizes:
+The engine's mains take their session from `graft.GraftSession`; a
+cluster deployment should carry these over and scale the sizes. The
+three AQE lines are Spark 4.1 defaults, listed because the skew handling
+below depends on them:
 
 ```
-spark.sql.adaptive.enabled=true                  # runtime re-planning
-spark.sql.adaptive.skewJoin.enabled=true         # split hot partitions
-spark.sql.adaptive.advisoryPartitionSizeInBytes=64m
+spark.sql.adaptive.enabled=true                  # Spark default; runtime re-planning
+spark.sql.adaptive.skewJoin.enabled=true         # Spark default; split hot partitions
+spark.sql.adaptive.advisoryPartitionSizeInBytes=64m  # Spark default
 spark.sql.shuffle.partitions=<2-3x total executor cores>
 spark.sql.files.maxPartitionBytes=128m           # scan-side task sizing
 spark.sql.codegen.cache.maxEntries=5000          # see below
@@ -141,20 +143,7 @@ where distinct sigs << rows) sits far below it.
 
   def main(args: Array[String]): Unit = {
     val sf = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // explicit AQE skew posture — the 100 TB conf recipe (SCALE.md)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      // default-100 codegen cache thrashes on many-operator plans (Bench note)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.BboxFastPath.install(spark)
+    val spark = GraftSession(32)
     import graft.functions.GeoFunctions._
 
     def pts(mult: Int): DataFrame = {

@@ -44,19 +44,7 @@ object ScaleSuite {
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      // default-100 codegen cache thrashes on many-operator plans (Bench note)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.BboxFastPath.install(spark)
+    val spark = GraftSession(cpus.toInt)
 
     // ---- build the Nx dir: the exact replication layout Scale uses --------
     val dirN = s"/tmp/graft_suite_${mult}x"

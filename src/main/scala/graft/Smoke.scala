@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Local smoke of the driver's t1 contract: SparkEntry.entry(spark) must
   * return rows > 0 on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.BboxFastPath.install(spark)
+    val spark = GraftSession(4)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(30, truncate = false)

@@ -561,12 +561,11 @@ object SparkEntry {
       val b = boxes(s, d).filter(col("l_orderkey") % 25 === 4)
       val hole = st_makebox(col("ax0") + lit(0.25), col("ay0") + lit(0.25),
         col("ax0") + lit(0.75), col("ay0") + lit(0.75))
-      // st_eval_once + a named column: poly feeds BOTH output columns; as a
-      // bare Column expression it was cloned into each consumer at
-      // construction time, and the fence stops CollapseProject re-inlining
-      // the named column — the JTS difference ran twice per row (§4.4)
-      b.withColumn("__poly", st_eval_once(when(col("l_orderkey") % 2 === 0,
-          st_difference(col("box_a"), hole)).otherwise(col("box_a"))))
+      // a named column: poly feeds BOTH output columns; as a bare Column
+      // expression it was cloned into each consumer at construction time,
+      // so the JTS difference ran twice per row
+      b.withColumn("__poly", when(col("l_orderkey") % 2 === 0,
+          st_difference(col("box_a"), hole)).otherwise(col("box_a")))
         .select(col("l_orderkey"), col("l_linenumber"),
           st_n_interior_rings(col("__poly")).as("n_holes"),
           round(st_area(col("__poly")), 6).as("area"))
@@ -1154,9 +1153,8 @@ object SparkEntry {
         .withColumn("sq", (col("n_nationkey") % 5 + 1).cast("double"))
         .withColumn("mic", stMaxInscribedCircleU(
           st_makebox(lit(0.0), lit(0.0), col("sq"), col("sq")), lit(1e-7)))
-      // st_eval_once: the interpolated center point feeds cx AND cy;
-      // unfenced, the interpolate UDF ran twice per row (§4.4)
-      n.withColumn("__ctr", st_eval_once(st_interpolate(col("mic"), lit(0.0), lit(false))))
+      // a named column: the interpolated center point feeds cx AND cy
+      n.withColumn("__ctr", st_interpolate(col("mic"), lit(0.0), lit(false)))
         .select(col("n_nationkey"),
           round(st_x(col("__ctr")), 6).as("cx"),
           round(st_y(col("__ctr")), 6).as("cy"),
@@ -1365,9 +1363,10 @@ object SparkEntry {
           "concat('POLYGON ((0 ', t, ', 0 ', t+2, ', 2 ', t+2, ', 1.8 ', t+1.5, ', 2.2 ', t+1, ', 1.8 ', t+0.5, ', 2 ', t, ', 0 ', t, '))')"))
         .withColumn("rw", expr(
           "concat('POLYGON ((2 ', t, ', 1.8 ', t+0.5, ', 2.2 ', t+1, ', 1.8 ', t+1.5, ', 2 ', t+2, ', 4 ', t+2, ', 4 ', t, ', 2 ', t, '))')"))
-        .withColumn("parts", st_simplify_coverage(
-          array(st_geomfromwkt(col("lw")), st_geomfromwkt(col("rw"))), lit(0.5)))
-      n.select(col("n_nationkey"), explode(col("parts")).as("pg"))
+      // explode the UDF itself: exploding a column that holds it lets
+      // InferFiltersFromGenerate copy the UDF into a `size(...) > 0` filter
+      n.select(col("n_nationkey"), explode(st_simplify_coverage(
+          array(st_geomfromwkt(col("lw")), st_geomfromwkt(col("rw"))), lit(0.5))).as("pg"))
         .select(col("n_nationkey"), st_area(col("pg")).as("pa"))
         .groupBy(col("n_nationkey"))
         .agg(count(lit(1)).as("n_parts"), round(min(col("pa")), 6).as("min_area"),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,26 +24,9 @@ object Verify {
     // optional 3rd arg: comma-separated query names to run (default: all)
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // explicit AQE skew posture — the 100 TB conf recipe (SCALE.md)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      // default-100 codegen cache thrashes on many-operator plans (Bench note)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
     // optional scheduler-level overrides, e.g. the speculation soak:
     //   SPARK_GRAFT_EXTRA_CONF="spark.speculation=true,spark.speculation.quantile=0.5"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(parseExtraConf)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.BboxFastPath.install(spark)
+    val spark = GraftSession(cpus.toInt, sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(parseExtraConf))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1))).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -281,16 +281,6 @@ object GeoFunctions extends Serializable {
   def st_minimum_bounding_circle(g: Column): Column = stMinBoundingCircleU(g)
   def st_normalize(g: Column): Column = stNormalizeU(g)
   def st_make_valid(g: Column): Column = stMakeValidU(g)
-  /** Pin a computed geometry to ONE evaluation (guide §4.4): a
-    * deterministic geometry expression consumed by several outputs or by a
-    * filter is inlined into each consumer by CollapseProject /
-    * PushDownPredicates, re-running the JTS op per consumer per row (the
-    * Clip/Overlay fence posture). Nondeterministic IDENTITY on the WKB
-    * bytes — pure, so results and retries are unchanged; one shared UDF
-    * instance so canonicalized plans stay equal across calls. */
-  def st_eval_once(g: Column): Column = stEvalOnceU(g)
-  private val stEvalOnceU =
-    udf((b: Array[Byte]) => b).asNondeterministic()
   def st_reverse(g: Column): Column = stReverseU(g)
   def st_buffer(g: Column, d: Column): Column = stBufferU(g, d)
   def st_buffer(g: Column, d: Column, quadSegs: Column, capStyle: Column, joinStyle: Column,

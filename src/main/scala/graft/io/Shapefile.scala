@@ -624,10 +624,15 @@ object Shapefile {
     val hconf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(hconf)
-    if (path.toLowerCase.endsWith(".shp")) Seq(path)
+    if (path.toLowerCase.endsWith(".shp") && fs.exists(p)) Seq(path)
     else if (fs.isDirectory(p))
       fs.listStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".shp")).sorted.toSeq
-    else fs.globStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".shp")).sorted.toSeq
+    else {
+      // null: a non-glob path that does not exist
+      val matched = Option(fs.globStatus(p)).getOrElse(
+        throw new java.io.FileNotFoundException(s"no shapefile or directory at $path"))
+      matched.map(_.getPath.toString).filter(_.toLowerCase.endsWith(".shp")).sorted.toSeq
+    }
   }
 
   private def sibling(shpPath: String, ext: String): String =

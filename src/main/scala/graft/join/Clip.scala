@@ -2,7 +2,9 @@ package graft.join
 
 import graft.functions.GeoFunctions._
 import graft.geom.{GeomOps, Wkb}
+import graft.plans.Fence
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Geometry
 
@@ -40,16 +42,15 @@ object Clip {
     * doing envelope test + point passthrough + rectangle intersection;
     * returns null for non-intersecting rows, filtered after.
     *
-    * The UDF is marked NONDETERMINISTIC (it is pure — this is the guide
-    * §4.4 anti-duplication fence): a deterministic UDF referenced by both
-    * the projection and the isNotNull filter is inlined into BOTH by
-    * CollapseProject/PushDownPredicates, so every row paid the WKB decode
-    * + JTS clip twice (q40's plan read `Filter isnotnull(UDF(...))` under
-    * `Project starea(UDF(...))`). A spreadNarrow repartition before the
-    * map was tried and measured NEGATIVE here (q40 profile: the exchange
-    * shuffles the full WKB payload, ~25 MB, which costs as much wall as
-    * the light per-row clip saves — unlike the tokenize/shingle maps where
-    * per-row work dominates), so narrow inputs keep their scan layout. */
+    * The clipped column is fenced ([[Fence]]) before the isNotNull filter:
+    * unfenced, PushDownPredicates inlined the UDF into the filter, so every
+    * row paid the WKB decode + JTS clip twice (q40's plan read
+    * `Filter isnotnull(UDF(...))` under `Project starea(UDF(...))`). A
+    * spreadNarrow repartition before the map was tried and measured
+    * NEGATIVE here (q40 profile: the exchange shuffles the full WKB
+    * payload, ~25 MB, which costs as much wall as the light per-row clip
+    * saves — unlike the tokenize/shingle maps where per-row work
+    * dominates), so narrow inputs keep their scan layout. */
   def clipByRect(df: DataFrame, xmin: Double, ymin: Double, xmax: Double, ymax: Double,
                  geom: String = "geometry", keepGeomType: Boolean = false): DataFrame = {
     val clipU = udf((b: Array[Byte]) => {
@@ -66,9 +67,8 @@ object Clip {
             if (clipped.isEmpty) null else Wkb.write(clipped)
         }
       }
-    }).asNondeterministic()
-    val clipped = df.withColumn(geom, clipU(col(geom))).filter(col(geom).isNotNull)
-    if (!keepGeomType) clipped else finish(clipped, geom, keepGeomType = true)
+    })
+    clipWith(df, clipU, geom, keepGeomType)
   }
 
   def clipByGeometry(df: DataFrame, maskGeometry: Geometry, geom: String,
@@ -88,8 +88,13 @@ object Clip {
             if (clipped.isEmpty) null else Wkb.write(clipped)
         }
       }
-    }).asNondeterministic() // pure; §4.4 fence against double evaluation
-    val clipped = df.withColumn(geom, clipU(col(geom))).filter(col(geom).isNotNull)
+    })
+    clipWith(df, clipU, geom, keepGeomType)
+  }
+
+  private def clipWith(df: DataFrame, clipU: UserDefinedFunction, geom: String,
+                       keepGeomType: Boolean): DataFrame = {
+    val clipped = Fence(df.withColumn(geom, clipU(col(geom)))).filter(col(geom).isNotNull)
     if (!keepGeomType) clipped else finish(clipped, geom, keepGeomType = true)
   }
 
@@ -106,11 +111,8 @@ object Clip {
       cache.computeIfAbsent(new java.math.BigInteger(wkb), (_: java.math.BigInteger) => new Entry(Wkb.read(wkb)))
   }
 
-  // pure; nondeterministic-marked so the !st_isempty filter above it does
-  // not inline a second decode+extract per row (§4.4, same as clipU)
   private val keepTypeU = udf((b: Array[Byte], dim: Int) =>
     if (b == null) null else Wkb.write(GeomOps.collectionExtract(Wkb.read(b), dim)))
-    .asNondeterministic()
   private val dimU = udf((b: Array[Byte]) => if (b == null) None else Some(Wkb.read(b).getDimension))
 
   private def finish(clipped: DataFrame, geom: String, keepGeomType: Boolean): DataFrame = {
@@ -119,7 +121,7 @@ object Clip {
     else {
       val dim = clipped.select(dimU(col(geom)).as("__d")).filter(col("__d").isNotNull)
         .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(2)
-      nonEmpty.withColumn(geom, keepTypeU(col(geom), lit(dim))).filter(!st_isempty(col(geom)))
+      Fence(nonEmpty.withColumn(geom, keepTypeU(col(geom), lit(dim)))).filter(!st_isempty(col(geom)))
     }
   }
 }

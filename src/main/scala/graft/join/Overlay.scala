@@ -3,6 +3,7 @@ package graft.join
 import graft.functions.GeoFunctions._
 import graft.agg.GeoAggregates
 import graft.geom.{GeomOps, Wkb}
+import graft.plans.Fence
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,28 +23,9 @@ object Overlay {
 
   val Hows: Set[String] = Set("intersection", "union", "identity", "symmetric_difference", "difference")
 
-  // nondeterministic-marked (pure — the guide §4.4 anti-duplication fence,
-  // the Clip.keepTypeU posture): referenced by the st_isempty filter above
-  // it, a deterministic instance was inlined into the filter condition for
-  // a second full decode+extract per row
   private val keepTypeU = udf((b: Array[Byte], dim: Int) =>
     if (b == null) null else Wkb.write(GeomOps.collectionExtract(Wkb.read(b), dim)))
-    .asNondeterministic()
   private val dimU = udf((b: Array[Byte]) => if (b == null) None else Some(Wkb.read(b).getDimension))
-
-  /** Nondeterministic IDENTITY on WKB bytes — fences a COMPUTED geometry
-    * column (a per-row JTS intersection/difference) against alias
-    * substitution: PushDownPredicates pushes a Filter through a Project by
-    * inlining the projected expression into the condition whenever the
-    * PROJECT list is deterministic (the condition's own determinism is not
-    * checked for the Project case), so overlay's empties/null filter
-    * re-evaluated the geometry op up to three more times per row (q14's
-    * before-plan carried the difference UDF 3x inside one Filter
-    * condition). Wrapping the projected column makes the project field
-    * nondeterministic, which pins ONE evaluation; the function is pure so
-    * retries stay deterministic. One shared instance for plan-canonical
-    * equality (the Dedup.noPushdown convention). */
-  private val geomOnce = udf((b: Array[Byte]) => b).asNondeterministic()
 
   def overlay(df1: DataFrame, df2: DataFrame, how: String = "intersection",
               geom1: String = "geometry", geom2: String = "geometry",
@@ -72,15 +54,14 @@ object Overlay {
         val sym = symDiffPart(a, b, geom1, geom2, c1, c2, broadcastThreshold)
         unionAligned(inter, sym, geom1)
     }
-    // `geom1` is a computed column here (geomOnce-fenced in the parts
-    // below), so these filters read the attribute instead of re-evaluating
-    // the JTS op per predicate (guide §4.4; plans/r22/q14 before/after)
-    val nonEmpty = result.filter(!st_isempty(col(geom1)) && col(geom1).isNotNull)
+    // `geom1` is the parts' computed JTS result: behind the Fence these
+    // filters read the column instead of re-running the op per predicate
+    val nonEmpty = Fence(result).filter(!st_isempty(col(geom1)) && col(geom1).isNotNull)
     if (keepGeomType) {
       // target dimension = dimension of df1's geometries (ref overlay.py:303-308)
       val dim = a.select(dimU(col(geom1)).as("__d")).filter(col("__d").isNotNull)
         .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(2)
-      nonEmpty.withColumn(geom1, keepTypeU(col(geom1), lit(dim)))
+      Fence(nonEmpty.withColumn(geom1, keepTypeU(col(geom1), lit(dim))))
         .filter(!st_isempty(col(geom1)))
     } else nonEmpty
   }
@@ -100,7 +81,7 @@ object Overlay {
       leftGeom = geom1, rightGeom = geom2, lsuffix = "1", rsuffix = "2", broadcastThreshold = bt,
       leftCountHint = c1, rightCountHint = c2)
     val rGeom = if (geom1 == geom2) s"${geom2}_2" else geom2
-    pairs.withColumn(geom1, geomOnce(st_intersection(col(geom1), col(rGeom)))).drop(rGeom)
+    pairs.withColumn(geom1, st_intersection(col(geom1), col(rGeom))).drop(rGeom)
   }
 
   /** df1 minus (union of intersecting df2 geometries) per df1 row; rows with
@@ -120,8 +101,8 @@ object Overlay {
       .agg(GeoAggregates.st_union_agg(col(rGeom)).as("__graft_sub"))
     a.join(unioned, Seq("__graft_did"), "left")
       .withColumn(geom1,
-        geomOnce(when(col("__graft_sub").isNull, col(geom1))
-          .otherwise(st_difference(col(geom1), col("__graft_sub")))))
+        when(col("__graft_sub").isNull, col(geom1))
+          .otherwise(st_difference(col(geom1), col("__graft_sub"))))
       .drop("__graft_did", "__graft_sub")
   }
 

@@ -1,5 +1,6 @@
 package graft.join
 
+import graft.plans.Fence
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LocalRelation, LogicalPlan, Project, SubqueryAlias, Union}
 import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
@@ -53,7 +54,7 @@ private[graft] object Pins {
       case _: LeafNode      => false
       case p: Project       => !p.projectList.forall(_.deterministic)
       case f: Filter        => !f.condition.deterministic
-      case _: SubqueryAlias => false
+      case _: SubqueryAlias | _: Fence => false
       // Union is a NARROW concatenation: output partitions are the
       // children's partitions in child order, each row order preserved —
       // stable iff every child is (checked by the recursion below)

@@ -123,6 +123,10 @@ object SJoinNearest {
     // (after the result is pinned) — a long-lived session running many
     // sjoin_nearest calls must not accumulate storage blocks until eviction
     val toUnpersist = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // frames this call checkpointed (the stamped probe side when pinned,
+    // each round's remainder): released once the result is pinned, since
+    // waiting for the ContextCleaner leaves their blocks until a GC runs
+    val checkpoints = scala.collection.mutable.ArrayBuffer(lw)
     if (nLeft > 0 && nLeft <= MaterializeCap) {
       remaining = remaining.cache()
       toUnpersist += remaining
@@ -254,6 +258,7 @@ object SJoinNearest {
             if (anti.sparkSession.sparkContext.getCheckpointDir.isDefined) anti.checkpoint()
             else anti.localCheckpoint()
         }
+        checkpoints += remaining
       }
     }
     lastAutoRounds.set(rounds)
@@ -277,6 +282,12 @@ object SJoinNearest {
       else if (out.sparkSession.sparkContext.getCheckpointDir.isDefined) out.checkpoint()
       else out.localCheckpoint()
     toUnpersist.foreach(_.unpersist(blocking = false))
+    // the pinned result's lineage is truncated, so nothing reads these now;
+    // a frame whose root is not a LogicalRDD was not checkpointed here
+    if (toUnpersist.nonEmpty) checkpoints.foreach(_.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    })
     pinned
   }
 
@@ -342,21 +353,17 @@ object SJoinNearest {
           else cands.filter(_._2 == best).toArray
         }
       }
-    }).asNondeterministic() // stop Catalyst duplicating the tree probe
+    })
 
-    val withMatches = l2.withColumn("__graft_nn", nearestU(col(leftGeom)))
-    val exploded =
-      if (how == "left")
-        withMatches.select(col("*"),
-          explode_outer(when(size(col("__graft_nn")) > 0, col("__graft_nn"))).as("__graft_hit"))
-      else
-        withMatches.select(col("*"), explode(col("__graft_nn")).as("__graft_hit"))
+    // explode(probe) runs the probe once per row (see SpatialJoin.broadcastJoin)
+    val probe = nearestU(col(leftGeom))
     val joinType = if (how == "left") "left" else "inner"
     val dcol = distanceCol.getOrElse("__graft_dist")
-    val withDist = exploded
+    val withDist = l2
+      .select(col("*"), (if (how == "left") explode_outer(probe) else explode(probe)).as("__graft_hit"))
       .withColumn("__graft_bid", col("__graft_hit._1"))
       .withColumn(dcol, col("__graft_hit._2"))
-      .drop("__graft_nn", "__graft_hit")
+      .drop("__graft_hit")
     val res = withDist.join(broadcast(buildWithId), Seq("__graft_bid"), joinType)
       .drop("__graft_bid").drop(rGeomName)
     if (distanceCol.isEmpty) res.drop("__graft_dist") else res

@@ -1,6 +1,7 @@
 package graft.join
 
 import graft.geom.Wkb
+import graft.plans.Fence
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -231,10 +232,9 @@ object SpatialJoin {
     val dist = distance
     val bIsRight = buildRight
 
-    // asNondeterministic: semantically deterministic, but the marker stops
-    // Catalyst from duplicating this (STRtree-probing) expression into
-    // inferred generate-filters and collapsed projects — it must run once
-    // per stream row, not three times
+    // the probe is the generator's own input, so it runs once per stream
+    // row: as a projected column it was copied into the `size(...) > 0`
+    // filter InferFiltersFromGenerate derives for an attribute input
     val matchU = udf((g: Array[Byte]) => {
       if (g == null) Array.empty[Long]
       else {
@@ -254,20 +254,13 @@ object SpatialJoin {
         }
         out.toArray
       }
-    }).asNondeterministic()
+    })
 
+    // explode_outer emits one null-id row for an empty match array
     val outer = how != "inner"
-    val withMatches = stream.withColumn("__graft_matches", matchU(col(streamGeom)))
-    val exploded =
-      if (outer)
-        withMatches.select(col("*"),
-          explode_outer(when(size(col("__graft_matches")) > 0, col("__graft_matches"))).as("__graft_bid"))
-      else
-        withMatches.select(col("*"), explode(col("__graft_matches")).as("__graft_bid"))
-    val joinType = if (outer) "left" else "inner"
-    exploded
-      .drop("__graft_matches")
-      .join(broadcast(buildWithId), Seq("__graft_bid"), joinType)
+    val probe = matchU(col(streamGeom))
+    stream.select(col("*"), (if (outer) explode_outer(probe) else explode(probe)).as("__graft_bid"))
+      .join(broadcast(buildWithId), Seq("__graft_bid"), if (outer) "left" else "inner")
       .drop("__graft_bid")
   }
 
@@ -397,15 +390,18 @@ object SpatialJoin {
       g.cellsFor(xmin, ymin, xmax, ymax))
     val cellOfU = udf((x: Double, y: Double) => g.cellOf(x, y))
 
-    // left bboxes expanded by distance for dwithin (one side only)
-    val lb = lw.withColumn("__b", st_bounds(col(leftGeom))).filter(col("__b").isNotNull)
+    // left bboxes expanded by distance for dwithin (one side only). The
+    // bounds column is fenced: unfenced, the null filter and the join's
+    // inferred isnotnull filters were pushed below it with the bounds UDF
+    // copied in, five more WKB decodes per row
+    val lb = Fence(lw.withColumn("__b", st_bounds(col(leftGeom)))).filter(col("__b").isNotNull)
       .withColumn("__bx0", col("__b.xmin") - lit(expand))
       .withColumn("__by0", col("__b.ymin") - lit(expand))
       .withColumn("__bx1", col("__b.xmax") + lit(expand))
       .withColumn("__by1", col("__b.ymax") + lit(expand))
       .withColumn("__cell", explode(cellsU(col("__bx0"), col("__by0"), col("__bx1"), col("__by1"))))
       .drop("__b")
-    val rb = rw.withColumn("__b", st_bounds(col(rightGeom))).filter(col("__b").isNotNull)
+    val rb = Fence(rw.withColumn("__b", st_bounds(col(rightGeom)))).filter(col("__b").isNotNull)
       .withColumn("__rx0", col("__b.xmin")).withColumn("__ry0", col("__b.ymin"))
       .withColumn("__rx1", col("__b.xmax")).withColumn("__ry1", col("__b.ymax"))
       .withColumn("__cell", explode(cellsU(col("__rx0"), col("__ry0"), col("__rx1"), col("__ry1"))))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.TextFunctions._
+import graft.plans.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,18 +26,6 @@ import org.apache.spark.sql.functions._
   *    verify with the native VecDot/VecNorm kernels.
   */
 object Dedup {
-
-  /** Nondeterministic IDENTITY on booleans — an optimizer fence. A filter
-    * wrapped in it cannot be reordered below a repartition (nondeterministic
-    * predicates are never pushed), which is how [[shingled]] keeps its
-    * expensive token-count predicate on the spread side of the exchange —
-    * PushDownPredicates otherwise clones the whole tokenize subtree into
-    * the (often single-partition) scan task. The function itself is pure,
-    * so task retries stay deterministic; ONE shared instance so
-    * canonicalized plans compare equal across calls and scratch-cache
-    * lookups keep hitting. */
-  private val noPushdown: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((b: Boolean) => b).asNondeterministic()
 
   /** Spread a NARROW input before expensive map work without changing the
     * no-shuffle posture on already-parallel inputs: repartition only when
@@ -385,17 +374,15 @@ object Dedup {
     // that could even SHRINK scan parallelism (r21 verdict #4) — the
     // spreadNarrow guard keeps the single-file fix without the data-wide
     // exchange (guide §2.4).
-    // The token-count filter is wrapped in the nondeterministic identity
-    // FENCE: a bare deterministic predicate is pushed below the repartition
-    // by PushDownPredicates, re-running the full tokenize (serially,
-    // pre-spread) inside the scan task — the exact single-task hotspot the
-    // spread exists to avoid (guide §4.4 posture; the q135 profile read
+    // The token-count filter sits behind a Fence: unfenced,
+    // PushDownPredicates pushed it below the repartition, re-running the
+    // full tokenize (serially, pre-spread) inside the scan task — the exact
+    // single-task hotspot the spread exists to avoid (the q135 profile read
     // 2.7 s in that one task, ~80% of the query). On unspread inputs the
-    // fence still prevents the tokenize subtree from being CLONED below
-    // the projection by the same rule.
-    spreadNarrow(df.select(col(idCol).as("__id"), col(textCol).as("__txt")))
-      .select(col("__id"), tokens(col("__txt")).as("__t"))
-      .filter(noPushdown(size(col("__t")) >= k))
+    // fence still keeps the tokenize from being copied into the filter.
+    Fence(spreadNarrow(df.select(col(idCol).as("__id"), col(textCol).as("__txt")))
+      .select(col("__id"), tokens(col("__txt")).as("__t")))
+      .filter(size(col("__t")) >= k)
       .select(col("__id"), shinglesOfTokens(col("__t"), k).as("__sh"))
   }
 
@@ -2065,9 +2052,9 @@ object Dedup {
     // spread + fence: the shingled() pattern — tokenize after the (narrow-
     // input-only) spread, and keep the size filter from being pushed back
     // below it, where it would re-run the tokenizer serially in the scan
-    spreadNarrow(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), tokens(col(textCol)).as("__t"))
-      .filter(noPushdown(size(col("__t")) >= l))
+    Fence(spreadNarrow(df.select(col(idCol), col(textCol)))
+      .select(col(idCol), tokens(col(textCol)).as("__t")))
+      .filter(size(col("__t")) >= l)
       .select(col(idCol), explode(sequence(lit(1), size(col("__t")) - (l - 1))).as("__pos"),
         col("__t"))
       .withColumn("__w", concat_ws(" ", slice(col("__t"), col("__pos"), lit(l))))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.expr.{VecDot, VecNorm}
+import graft.plans.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftColumnBridge.{column => exprCol, expression => colExpr}
 import org.apache.spark.sql.functions._
@@ -115,7 +116,9 @@ object Similarity {
         s * scale
       }
     }
-    df.withColumn(outCol, u(col(vecCol)))
+    // fenced: a filter over the projection (explode's inferred size filter
+    // included) reads the column instead of projecting again
+    Fence(df.withColumn(outCol, u(col(vecCol))))
   }
 
   /** Ingest-time column: the LSH bucket of each vector. Persist this (and

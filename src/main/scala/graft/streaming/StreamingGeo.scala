@@ -74,15 +74,11 @@ object StreamingGeo {
         }
         out.toArray
       }
-    }).asNondeterministic() // stop Catalyst duplicating the tree probe
+    })
 
-    val withMatches = stream.withColumn("__m", matchU(col(streamGeom)))
-    val exploded =
-      if (keepUnmatched)
-        withMatches.select(col("*"), explode_outer(when(size(col("__m")) > 0, col("__m"))).as("__graft_bid"))
-      else
-        withMatches.select(col("*"), explode(col("__m")).as("__graft_bid"))
-    exploded.drop("__m")
+    // explode(probe) runs the probe once per row (see SpatialJoin.broadcastJoin)
+    val probe = matchU(col(streamGeom))
+    stream.select(col("*"), (if (keepUnmatched) explode_outer(probe) else explode(probe)).as("__graft_bid"))
       .join(broadcast(buildWithId.drop(staticGeom)), Seq("__graft_bid"),
         if (keepUnmatched) "left" else "inner")
       .drop("__graft_bid")

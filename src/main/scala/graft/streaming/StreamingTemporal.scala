@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.plans.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -111,9 +112,11 @@ object StreamingTemporal {
     }
 
     val lSigned = (norm(stream, leftTs) * sign).as("__lt")
-    val withMatch = stream
+    // fenced: the inner filter on __ok reads the looked-up column instead of
+    // running the lookup a second time
+    val withMatch = Fence(stream
       .withColumn("__lt", lSigned)
-      .withColumn("__mt", lookup(keyOf(by.map(col)), col("__lt")))
+      .withColumn("__mt", lookup(keyOf(by.map(col)), col("__lt"))))
     val tolOk = tolerance match {
       case None      => col("__mt").isNotNull
       case Some(tol) => col("__mt").isNotNull && (col("__lt") - col("__mt")) <= lit(tol)

@@ -17,6 +17,14 @@ class ShapefileSpec extends AnyFunSuite {
   private val lowres = "/root/reference/geopandas/tests/data/naturalearth_lowres/naturalearth_lowres.shp"
   private val cities = "/root/reference/geopandas/tests/data/naturalearth_cities/naturalearth_cities.shp"
 
+  test("a missing .shp path or directory fails at read, naming the path") {
+    val dir = java.nio.file.Files.createTempDirectory("shpmissing").toString
+    for (path <- Seq(s"$dir/absent.shp", s"$dir/absent_dir")) {
+      val e = intercept[java.io.FileNotFoundException](Shapefile.read(spark, path))
+      assert(e.getMessage.contains(path), e.getMessage)
+    }
+  }
+
   test("naturalearth_lowres: 177 countries, schema, valid polygons, lon/lat bounds") {
     val gdf = Shapefile.read(spark, lowres)
     val df = gdf.df.cache()

@@ -5,16 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all Spark suites. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession
       // local[threads, maxFailures]: 4 task attempts so DeterminismSpec can
       // inject first-attempt failures and observe the retry actually rerun;
       // tests that expect task errors to propagate still fail (after retries)
-      .master("local[4, 4]")
+      .builder("local[4, 4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // binaryFiles packs files into >=openCost splits; tests use KB-sized
       // fixtures, so lower it to see real multi-file parallelism in specs
       .config("spark.files.openCostInBytes", "1024")

@@ -309,7 +309,11 @@ class SpatialJoinSpec extends AnyFunSuite {
     // are unpersisted before returning; only the pinned RESULT (one
     // localCheckpoint per call, released with the DataFrame) may remain
     val sc = spark.sparkContext
-    def cachedNonResult(): Int = sc.getPersistentRDDs.size
+    // count only RDDs created by the three calls below: ids above a marker
+    // taken now, so other suites' RDDs (and when the ContextCleaner reclaims
+    // them) cannot move the count
+    val marker = sc.emptyRDD[Int].id
+    def cachedNonResult(): Int = sc.getPersistentRDDs.keys.count(_ > marker)
     val before = cachedNonResult()
     val stream = (0 until 50).map(i => (i, Wkb.write(GeomOps.point(i * 0.3, 0.0))))
       .toDF("pid", "geometry")
@@ -319,12 +323,10 @@ class SpatialJoinSpec extends AnyFunSuite {
         broadcastThreshold = -1)
       assert(j.count() == 50)
     }
-    // growth bounded by the pinned results (one localCheckpoint each) plus
-    // at most one per-round `remaining` checkpoint per call (kept out of
-    // the explicit unpersist on purpose: its lineage is truncated, so only
-    // the ContextCleaner may safely reclaim it once unreachable) — NOT by
-    // 3 x (probe cache + per-round matched caches), which is what leaked
-    // before the fix (>= 9 here)
+    // growth bounded by the pinned results (one localCheckpoint each; the
+    // stamped probe side and per-round remainders are released once the
+    // result is pinned) — NOT by 3 x (probe cache + per-round matched
+    // caches), which is what leaked before the fix (>= 9 here)
     val after = cachedNonResult()
     assert(after - before <= 6,
       s"persistent RDDs grew $before -> $after: intermediate caches leaked")
