@@ -12,6 +12,7 @@ import org.locationtech.jts.linearref.LengthIndexedLine
 import org.locationtech.jts.operation.buffer.{BufferOp, BufferParameters, OffsetCurve}
 import org.locationtech.jts.operation.distance.DistanceOp
 import org.locationtech.jts.operation.linemerge.LineMerger
+import org.locationtech.jts.operation.overlayng.{PrecisionUtil, UnaryUnionNG}
 import org.locationtech.jts.operation.polygonize.Polygonizer
 import org.locationtech.jts.operation.union.UnaryUnionOp
 import org.locationtech.jts.precision.{GeometryPrecisionReducer, MinimumClearance}
@@ -388,9 +389,20 @@ object GeomOps {
   def union(a: Geometry, b: Geometry): Geometry = a.union(b)
   def difference(a: Geometry, b: Geometry): Geometry = a.difference(b)
   def symDifference(a: Geometry, b: Geometry): Geometry = a.symDifference(b)
+  /** Union of the non-null geometries, null when there is none. JTS's
+    * cascaded UnaryUnion can throw `TopologyException` ("Ring edge
+    * missing") on overlay-cut pieces even after its own robust fallbacks;
+    * the retry snap-rounds every input to a grid scaled to their extent
+    * (`PrecisionUtil.safeScale`: about 14 significant digits) and unions
+    * with OverlayNG, whose snap-rounding noder is robust. */
   def unionAll(gs: Seq[Geometry]): Geometry = {
     val nonNull = gs.filter(g => g != null)
-    if (nonNull.isEmpty) null else UnaryUnionOp.union(nonNull.asJava)
+    if (nonNull.isEmpty) null
+    else try UnaryUnionOp.union(nonNull.asJava) catch {
+      case _: TopologyException =>
+        val all = gf.buildGeometry(nonNull.asJava)
+        UnaryUnionNG.union(all, new PrecisionModel(PrecisionUtil.safeScale(all)))
+    }
   }
   def intersectionAll(gs: Seq[Geometry]): Geometry = {
     val nonNull = gs.filter(_ != null)
@@ -553,7 +565,7 @@ object GeomOps {
     val nonNull = gs.filter(_ != null)
     if (nonNull.isEmpty) null
     else if (gridSize <= 0) unionAll(nonNull)
-    else org.locationtech.jts.operation.overlayng.UnaryUnionNG.union(nonNull.asJava, pmOf(gridSize))
+    else UnaryUnionNG.union(nonNull.asJava, pmOf(gridSize))
   }
 
   /** union_all(method="disjoint_subset") (ref base.py:2500-2553; GEOS 3.12
@@ -583,7 +595,7 @@ object GeomOps {
     }
     val comps = geoms.indices.groupBy(find)
     val unions = comps.values.map { idxs =>
-      if (idxs.size == 1) geoms(idxs.head) else UnaryUnionOp.union(idxs.map(geoms).asJava)
+      if (idxs.size == 1) geoms(idxs.head) else unionAll(idxs.map(geoms))
     }.toSeq
     if (unions.size == 1) unions.head else collect(unions)
   }

@@ -58,8 +58,9 @@ object Overlay {
     // filters read the column instead of re-running the op per predicate
     val nonEmpty = Fence(result).filter(!st_isempty(col(geom1)) && col(geom1).isNotNull)
     if (keepGeomType) {
-      // target dimension = dimension of df1's geometries (ref overlay.py:303-308)
-      val dim = a.select(dimU(col(geom1)).as("__d")).filter(col("__d").isNotNull)
+      // target dimension = dimension of df1's geometries (ref overlay.py:303-308);
+      // fenced so the null filter does not make the row's geometry again
+      val dim = Fence(a.select(dimU(col(geom1)).as("__d"))).filter(col("__d").isNotNull)
         .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(2)
       Fence(nonEmpty.withColumn(geom1, keepTypeU(col(geom1), lit(dim))))
         .filter(!st_isempty(col(geom1)))
@@ -88,22 +89,52 @@ object Overlay {
     * no intersection pass through unchanged (ref overlay.py:88-111). */
   private def differencePart(df1: DataFrame, df2: DataFrame, geom1: String, geom2: String,
                              c1: Option[Long], c2: Option[Long], bt: Long): DataFrame = {
-    val (a0, b0) = suffixCols(df1, df2, geom1, geom2)
+    val (a, b0) = suffixCols(df1, df2, geom1, geom2)
     val b = b0.select(col(geom2))
+    val rightCount = c2.getOrElse(SpatialJoin.countUpTo(b, bt))
+    val withSub =
+      if (rightCount <= bt) broadcastSubtrahends(a, b, geom1, geom2)
+      else gridSubtrahends(a, b, geom1, geom2, c1, rightCount, bt)
+    withSub
+      .withColumn(geom1,
+        when(col("__graft_sub").isNull, col(geom1))
+          .otherwise(st_difference(col(geom1), col("__graft_sub"))))
+      .drop("__graft_sub")
+  }
+
+  /** The left frame plus `__graft_sub`, the union of the right geometries
+    * each row intersects (null for none), as one projection: the row's
+    * geometry probes the broadcast STRtree of the right geometries with
+    * the broadcast sjoin's prepared `intersects`. The left frame runs once,
+    * with no id stamp, union shuffle or re-join. */
+  private def broadcastSubtrahends(a: DataFrame, b: DataFrame, geom1: String, geom2: String): DataFrame = {
+    val bc = new SpatialJoin.BroadcastBuild(b, geom2, reread = false).index
+    val bcId = bc.id
+    val subtrahendU = udf((g: Array[Byte]) =>
+      if (g == null) null
+      else {
+        val idx = BroadcastTreeCache.get(bcId, bc.value)
+        val hits = idx.matching("intersects", Wkb.read(g), buildIsRight = true, 0.0)
+        if (hits.isEmpty) null else Wkb.write(GeomOps.unionAll(hits.toSeq.map(idx.geom(_))))
+      })
+    a.withColumn("__graft_sub", subtrahendU(col(geom1)))
+  }
+
+  /** `__graft_sub` for a right side too large to broadcast: intersecting
+    * pairs from the sjoin, grouped per stamped left row into a union and
+    * re-joined to the left frame. */
+  private def gridSubtrahends(a0: DataFrame, b: DataFrame, geom1: String, geom2: String,
+                              c1: Option[Long], rightCount: Long, bt: Long): DataFrame = {
     // ids are consumed twice (pair join + final re-join); pinned only when
     // the upstream is not evaluation-stable (cf. Pins)
     val a = Pins.stampPinned(a0, "__graft_did")
     val pairs = SpatialJoin.sjoinCore(a, b, predicate = "intersects", how = "inner",
       leftGeom = geom1, rightGeom = geom2, lsuffix = "1", rsuffix = "2", broadcastThreshold = bt,
-      leftCountHint = c1, rightCountHint = c2)
+      leftCountHint = c1, rightCountHint = Some(rightCount))
     val rGeom = if (geom1 == geom2) s"${geom2}_2" else geom2
     val unioned = pairs.groupBy("__graft_did")
       .agg(GeoAggregates.st_union_agg(col(rGeom)).as("__graft_sub"))
-    a.join(unioned, Seq("__graft_did"), "left")
-      .withColumn(geom1,
-        when(col("__graft_sub").isNull, col(geom1))
-          .otherwise(st_difference(col(geom1), col("__graft_sub"))))
-      .drop("__graft_did", "__graft_sub")
+    a.join(unioned, Seq("__graft_did"), "left").drop("__graft_did")
   }
 
   private def symDiffPart(df1: DataFrame, df2: DataFrame, geom1: String, geom2: String,

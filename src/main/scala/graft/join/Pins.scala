@@ -20,6 +20,14 @@ import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
   * loss (non-reliable checkpoint blocks are unrecoverable). So: pin ONLY
   * when the upstream is not evaluation-stable; the common scan→filter→
   * project shape skips the materialization entirely.
+  *
+  * The broadcast paths (sjoin, sjoin_nearest, overlay difference) pin
+  * nothing: a build side that only reads stored rows is stamped and read
+  * again, any other is collected once and keyed by position
+  * (`SpatialJoin.BroadcastBuild`). Pinned stamps remain on the grid
+  * join's outer sides, the outer sjoin with `onAttribute`, the grid
+  * overlay difference, the unbounded nearest and the AutoSpatialJoin
+  * outer rewrites.
   */
 private[graft] object Pins {
 

@@ -295,15 +295,8 @@ object SJoinNearest {
                                leftGeom: String, rGeomName: String,
                                maxDistance: Option[Double], distanceCol: Option[String],
                                exclusive: Boolean): DataFrame = {
-    val spark = l2.sparkSession
-    // the same plan is collect()ed for the tree here and re-joined below —
-    // pinned when a non-deterministic upstream (round-robin repartition,
-    // AQE) could assign different ids on the second evaluation
-    val buildWithId = Pins.stampPinned(r2, "__graft_bid")
-    val rows = buildWithId.select(col("__graft_bid"), col(rGeomName))
-      .na.drop(Seq(rGeomName)).collect()
-      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
-    val bc = spark.sparkContext.broadcast(rows)
+    val side = new SpatialJoin.BroadcastBuild(r2, rGeomName)
+    val bc = side.index
     val bcId = bc.id
     val maxD = maxDistance.getOrElse(Double.PositiveInfinity)
     val excl = exclusive
@@ -361,11 +354,11 @@ object SJoinNearest {
     val dcol = distanceCol.getOrElse("__graft_dist")
     val withDist = l2
       .select(col("*"), (if (how == "left") explode_outer(probe) else explode(probe)).as("__graft_hit"))
-      .withColumn("__graft_bid", col("__graft_hit._1"))
+      .withColumn(SpatialJoin.BuildId, col("__graft_hit._1"))
       .withColumn(dcol, col("__graft_hit._2"))
       .drop("__graft_hit")
-    val res = withDist.join(broadcast(buildWithId), Seq("__graft_bid"), joinType)
-      .drop("__graft_bid").drop(rGeomName)
+    val res = withDist.join(broadcast(side.keyed), Seq(SpatialJoin.BuildId), joinType)
+      .drop(SpatialJoin.BuildId).drop(rGeomName)
     if (distanceCol.isEmpty) res.drop("__graft_dist") else res
   }
 

@@ -3,8 +3,11 @@ package graft.join
 import graft.geom.Wkb
 import graft.plans.Fence
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.types.LongType
 import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.index.strtree.STRtree
@@ -16,12 +19,14 @@ import org.locationtech.jts.index.strtree.STRtree
   * reference's single hard-coded strategy of "STRtree on one side",
   * `sjoin.py:212-268`, but distributed):
   *
-  *  1. '''Broadcast''': the small side is collected, broadcast, and an
-  *     STRtree + prepared geometries are built once per executor JVM. The
-  *     stream side explodes matching build-row ids via a UDF, then a plain
-  *     Catalyst broadcast hash join on the integer id attaches build-side
-  *     columns — keeping the row-assembly inside whole-stage codegen and
-  *     never shuffling the big side.
+  *  1. '''Broadcast''': the small side's geometries are collected and
+  *     broadcast, and an STRtree + prepared geometries are built once per
+  *     executor JVM. The stream side explodes the ids of matching build
+  *     rows via a UDF, then a plain Catalyst broadcast hash join on the id
+  *     attaches the build rows — keeping the row-assembly inside
+  *     whole-stage codegen and never shuffling the big side. A computed
+  *     build side runs once: its collected rows are the re-joined rows
+  *     (see [[SpatialJoin.BroadcastBuild]]).
   *  2. '''Grid (PBSM)''': both sides are assigned grid cells covered by
   *     their (distance-expanded) bboxes, exploded, hash-joined on cell id
   *     with bbox-overlap pre-conditions, refined by the exact predicate,
@@ -114,9 +119,6 @@ object SpatialJoin {
     }
   }
 
-  /** Like [[sjoin]] but keeps BOTH geometry columns (needed by overlay and
-    * nearest, which compute on the pair). If the two geometry column names
-    * clash, the right one is exposed as `<name>_<rsuffix>`. */
   /** `df.count()` capped at `cap + 1` — the limit short-circuits the scan, so
     * "is this side small?" never costs a full pass over a 100 TB side. */
   private[graft] def countUpTo(df: DataFrame, cap: Long): Long =
@@ -209,24 +211,70 @@ object SpatialJoin {
   // Broadcast strategy
   // -------------------------------------------------------------------------
 
+  /** The column that keys a broadcast build side's rows. */
+  private[graft] val BuildId = "__graft_bid"
+
+  /** The build side of a broadcast join: the build geometries keyed by
+    * [[BuildId]], the STRtree's source (`index`), and the build rows the
+    * probe's matches re-join on [[BuildId]] (`keyed`).
+    *
+    * A build that only reads stored rows (a plan [[Pins]] finds stable,
+    * whose projections compute no column) is stamped with
+    * `monotonically_increasing_id`: its geometries are collected for the
+    * index and the BroadcastExchange reads it again from its source. Any
+    * other build runs once, in one `collect()`: the collected rows feed
+    * the index and, keyed by position, are the re-join side, so a computed
+    * build (a clip output) is neither computed again nor pinned. Those
+    * rows are re-joined from slices of about [[SliceBytes]] each, so no
+    * task carries a large share of them. `reread = false` always collects
+    * (a streaming join may not stamp ids; an overlay difference re-joins
+    * nothing). */
+  private[graft] final class BroadcastBuild(build: DataFrame, geom: String, reread: Boolean = true) {
+    private val sc = build.sparkSession.sparkContext
+    private val (geoms, rows, stamped) =
+      if (reread && storedRows(build)) {
+        val stamped = build.withColumn(BuildId, monotonically_increasing_id())
+        val geoms = stamped.select(col(BuildId), col(geom)).na.drop(Seq(geom)).collect()
+          .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
+        (geoms, Array.empty[Row], Some(stamped))
+      } else {
+        val rows = build.collect()
+        val g = build.schema.fieldIndex(geom)
+        val geoms = rows.indices.collect {
+          case i if !rows(i).isNullAt(g) => (i.toLong, rows(i).getAs[Array[Byte]](g))
+        }.toArray
+        (geoms, rows, None)
+      }
+    val index: Broadcast[Array[(Long, Array[Byte])]] = sc.broadcast(geoms)
+    lazy val keyed: DataFrame = stamped.getOrElse {
+      val bytes = rows.length.toLong * build.schema.defaultSize + geoms.iterator.map(_._2.length.toLong).sum
+      build.sparkSession.createDataFrame(
+        sc.parallelize(rows.indices.map(i => Row.fromSeq(rows(i).toSeq :+ i.toLong)), (bytes / SliceBytes + 1).toInt),
+        build.schema.add(BuildId, LongType, nullable = false))
+    }
+  }
+
+  /** Spark's large-task warning size (1000 KiB, `TaskSetManager`). */
+  private val SliceBytes = 1000L * 1024
+
+  /** Whether running `df` again only reads stored rows: a stable plan in
+    * the sense of [[Pins]] whose projections select or rename columns. */
+  private def storedRows(df: DataFrame): Boolean =
+    !Pins.needsPin(df) && !df.queryExecution.analyzed.exists {
+      case p: Project => !p.projectList.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _                                     => false
+      }
+      case _ => false
+    }
+
   private def broadcastJoin(l2: DataFrame, r2: DataFrame, predicate: String, how: String,
                             leftGeom: String, rightGeom: String, distance: Double,
                             buildRight: Boolean): DataFrame = {
-    val spark = l2.sparkSession
     val (stream, streamGeom, build, buildGeom) =
       if (buildRight) (l2, leftGeom, r2, rightGeom) else (r2, rightGeom, l2, leftGeom)
-
-    // the id-stamped rows are both collect()ed for the index and re-joined
-    // below; Pins.stampPinned freezes them (localCheckpoint) only when a
-    // non-deterministic upstream could assign different ids on the second
-    // evaluation — scan-rooted builds skip the materialization
-    val buildWithId = Pins.stampPinned(build, "__graft_bid")
-    val rows: Array[(Long, Array[Byte])] = buildWithId
-      .select(col("__graft_bid"), col(buildGeom))
-      .na.drop(Seq(buildGeom))
-      .collect()
-      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
-    val bc: Broadcast[Array[(Long, Array[Byte])]] = spark.sparkContext.broadcast(rows)
+    val side = new BroadcastBuild(build, buildGeom)
+    val bc = side.index
     val bcId = bc.id
     val pred = predicate
     val dist = distance
@@ -235,33 +283,19 @@ object SpatialJoin {
     // the probe is the generator's own input, so it runs once per stream
     // row: as a projected column it was copied into the `size(...) > 0`
     // filter InferFiltersFromGenerate derives for an attribute input
-    val matchU = udf((g: Array[Byte]) => {
+    val matchU = udf((g: Array[Byte]) =>
       if (g == null) Array.empty[Long]
       else {
         val idx = BroadcastTreeCache.get(bcId, bc.value)
-        val geom = Wkb.read(g)
-        val env = new Envelope(geom.getEnvelopeInternal)
-        if (pred == "dwithin") env.expandBy(dist)
-        val cands = idx.tree.query(env)
-        val out = new scala.collection.mutable.ArrayBuffer[Long](math.min(cands.size(), 16))
-        var i = 0
-        while (i < cands.size()) {
-          val pos = cands.get(i).asInstanceOf[Integer].intValue()
-          val bGeom = idx.geom(pos)
-          val prep = idx.prepared(pos)
-          if (SpatialJoin.evalWithPrepared(pred, prep, bGeom, geom, bIsRight, dist)) out += idx.ids(pos)
-          i += 1
-        }
-        out.toArray
-      }
-    })
+        idx.matching(pred, Wkb.read(g), bIsRight, dist).map(idx.ids(_))
+      })
 
     // explode_outer emits one null-id row for an empty match array
     val outer = how != "inner"
     val probe = matchU(col(streamGeom))
-    stream.select(col("*"), (if (outer) explode_outer(probe) else explode(probe)).as("__graft_bid"))
-      .join(broadcast(buildWithId), Seq("__graft_bid"), if (outer) "left" else "inner")
-      .drop("__graft_bid")
+    stream.select(col("*"), (if (outer) explode_outer(probe) else explode(probe)).as(BuildId))
+      .join(broadcast(side.keyed), Seq(BuildId), if (outer) "left" else "inner")
+      .drop(BuildId)
   }
 
   // -------------------------------------------------------------------------
@@ -539,6 +573,23 @@ object BroadcastTreeCache {
     }
     def prepared(i: Int): PreparedGeometry =
       prep.computeIfAbsent(i, (k: Int) => PreparedGeometryFactory.prepare(geom(k)))
+
+    /** Positions of the indexed geometries for which `pred` holds against
+      * `g`, with the indexed (build) geometry prepared; `buildIsRight` as
+      * in [[SpatialJoin.evalWithPrepared]]. */
+    def matching(pred: String, g: Geometry, buildIsRight: Boolean, distance: Double): Array[Int] = {
+      val env = new Envelope(g.getEnvelopeInternal)
+      if (pred == "dwithin") env.expandBy(distance)
+      val cands = tree.query(env)
+      val out = Array.newBuilder[Int]
+      var i = 0
+      while (i < cands.size()) {
+        val pos = cands.get(i).asInstanceOf[Integer].intValue()
+        if (SpatialJoin.evalWithPrepared(pred, prepared(pos), geom(pos), g, buildIsRight, distance)) out += pos
+        i += 1
+      }
+      out.result()
+    }
   }
 
   /** Bound on retained trees per JVM. Broadcast ids are monotonically

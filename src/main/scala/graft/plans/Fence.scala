@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge.ofRows
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Evaluate-once fence: a logical no-op over `child` that Catalyst's
   * pushdown and collapse rules do not see through.
@@ -18,10 +18,14 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * The expression stays deterministic, so Pins, exchange reuse and retries
   * see it as what it is.
   *
-  * The node exists only in the analyzed plan and the optimizer batches:
-  * [[Fence.RemoveFences]] replaces it by its child in the user-provided
-  * optimizer batch, which runs after every PushDownPredicates batch, so no
-  * physical node is planned. */
+  * The node stays in the optimized plan and [[Fence.PlanFence]] plans it
+  * as its child, so no physical node is left. Keeping it until physical
+  * planning matters over a scan: the scan strategies (FileSourceStrategy,
+  * InMemoryScans, V2 scans) collect a Project/Filter chain with
+  * `ScanOperation`, which substitutes the projected expression into the
+  * filter, so a fenced filter removed by the optimizer would still end up
+  * evaluating it under the projection that evaluates it again.
+  * `ScanOperation` stops at the Fence. */
 case class Fence(child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   override protected def withNewChildInternal(newChild: LogicalPlan): Fence = copy(child = newChild)
@@ -31,7 +35,7 @@ object Fence {
 
   /** `df` behind a fence: filters and projections written over the result
     * read its columns instead of re-evaluating their expressions. Installs
-    * [[RemoveFences]] on the session. */
+    * [[PlanFence]] on the session. */
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     install(spark)
@@ -39,12 +43,14 @@ object Fence {
   }
 
   def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(RemoveFences))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RemoveFences
+    if (!spark.experimental.extraStrategies.contains(PlanFence))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ PlanFence
 
-  object RemoveFences extends Rule[LogicalPlan] {
-    def apply(plan: LogicalPlan): LogicalPlan =
-      plan.transformUpWithSubqueries { case Fence(c) => c }
+  /** Plans a Fence as its child, the way SpecialLimits plans a plain root. */
+  object PlanFence extends SparkStrategy {
+    def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      case Fence(c) => planLater(c) :: Nil
+      case _        => Nil
+    }
   }
 }

@@ -29,7 +29,6 @@ object StreamingGeo {
                          streamGeom: String = "geometry",
                          keepUnmatched: Boolean = false,
                          broadcastThreshold: Long = 2000000L): DataFrame = {
-    val spark = static.df.sparkSession
     val staticGeom = static.geometryCol
     // same guard as SpatialJoin: the static layer is collected + broadcast,
     // so an over-threshold layer must fail loudly, not OOM the driver.
@@ -41,47 +40,27 @@ object StreamingGeo {
         s"$broadcastThreshold rows; repartition-and-join the stream against " +
         s"it in batch, or raise broadcastThreshold if the driver can hold it")
     }
-    // id assignment at the RDD level: monotonically_increasing_id() is
-    // rejected by the streaming unsupported-operations checker even on the
-    // batch side of a stream-static join
-    val buildWithId = {
-      val schema = static.df.schema.add("__graft_bid", org.apache.spark.sql.types.LongType)
-      val rdd = static.df.rdd.zipWithIndex().map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-      }
-      spark.createDataFrame(rdd, schema)
-    }
-    val rows = buildWithId.select(col("__graft_bid"), col(staticGeom))
-      .na.drop(Seq(staticGeom)).collect()
-      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
-    val bc = spark.sparkContext.broadcast(rows)
+    // the static layer runs once: its collected rows feed the STRtree and,
+    // keyed by position, the batch side of the stream-static join (an id
+    // stamp is rejected by the streaming unsupported-operations checker)
+    val side = new SpatialJoin.BroadcastBuild(static.df, staticGeom, reread = false)
+    val bc = side.index
     val bcId = bc.id
     val pred = predicate
 
-    val matchU = udf((g: Array[Byte]) => {
+    val matchU = udf((g: Array[Byte]) =>
       if (g == null) Array.empty[Long]
       else {
         val idx = BroadcastTreeCache.get(bcId, bc.value)
-        val geom = Wkb.read(g)
-        val cands = idx.tree.query(geom.getEnvelopeInternal)
-        val out = new scala.collection.mutable.ArrayBuffer[Long](4)
-        var i = 0
-        while (i < cands.size()) {
-          val pos = cands.get(i).asInstanceOf[Integer].intValue()
-          if (SpatialJoin.evalWithPrepared(pred, idx.prepared(pos), idx.geom(pos), geom,
-            buildIsRight = true, distance = 0.0)) out += idx.ids(pos)
-          i += 1
-        }
-        out.toArray
-      }
-    })
+        idx.matching(pred, Wkb.read(g), buildIsRight = true, 0.0).map(idx.ids(_))
+      })
 
     // explode(probe) runs the probe once per row (see SpatialJoin.broadcastJoin)
     val probe = matchU(col(streamGeom))
-    stream.select(col("*"), (if (keepUnmatched) explode_outer(probe) else explode(probe)).as("__graft_bid"))
-      .join(broadcast(buildWithId.drop(staticGeom)), Seq("__graft_bid"),
+    stream.select(col("*"), (if (keepUnmatched) explode_outer(probe) else explode(probe)).as(SpatialJoin.BuildId))
+      .join(broadcast(side.keyed.drop(staticGeom)), Seq(SpatialJoin.BuildId),
         if (keepUnmatched) "left" else "inner")
-      .drop("__graft_bid")
+      .drop(SpatialJoin.BuildId)
   }
 
   /** Per-window, per-grid-cell aggregation of a streaming point set:

@@ -38,7 +38,7 @@ object UdfOnce {
   /** Nodes that pass their child's rows through, so a call above them and
     * the same call below them run on the same row. */
   private def rowPreserving(p: LogicalPlan): Boolean = p match {
-    case _: Filter | _: RepartitionOperation | _: Sort => true
+    case _: Filter | _: RepartitionOperation | _: Sort | _: Fence => true
     case _ => false
   }
 
@@ -124,7 +124,7 @@ class EvaluateOnceSpec extends AnyFunSuite {
     val fenced = Fence(df).filter(col("a") > 0)
     val plan = assertOnce(fenced)
     assert(UdfOnce.occurrences(plan, { case _: ScalaUDF => true }) == 1, plan)
-    assert(!plan.exists(_.isInstanceOf[Fence]), plan)
+    assert(plan.exists(_.isInstanceOf[Fence]), plan)
     assert(!fenced.queryExecution.executedPlan.toString.contains("Fence"))
     assert(fenced.select("id").as[Int].collect().toSeq == Seq(0))
   }

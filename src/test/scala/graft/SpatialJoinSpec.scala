@@ -400,14 +400,16 @@ class SpatialJoinSpec extends AnyFunSuite {
 
   test("clip UDF evaluates once per row: the isNotNull filter must not inline it") {
     // the clip UDF (WKB decode + JTS clip) is referenced by the projection
-    // AND the not-null filter; deterministic, CollapseProject/PushDown
-    // inlined it into both, so every row paid the decode+clip twice (q40's
-    // r22 plan read `Filter isnotnull(UDF(...))` under `Project UDF(...)`).
-    // The nondeterministic fence pins a SINGLE UDF( occurrence in the plan.
-    // repartition keeps the input out of ConvertToLocalRelation's reach so
-    // the projection/filter actually appear in the physical plan
-    val polys = squares("id", (0, 0, 4, 4), (10, 10, 12, 12)).repartition(2)
-    val clipped = graft.join.Clip.clipByRect(polys, 1, 1, 3, 3)
+    // AND the not-null filter; unfenced, PushDownPredicates inlined it into
+    // both, so every row paid the decode+clip twice (q40's r22 plan read
+    // `Filter isnotnull(UDF(...))` under `Project UDF(...)`). Clip's Fence
+    // keeps a SINGLE UDF( occurrence in the executed plan. The input is a
+    // parquet scan: over a local relation, ConvertToLocalRelation evaluates
+    // the projection and filter on the driver and the executed plan shows
+    // one UDF with or without the fence
+    val dir = java.nio.file.Files.createTempDirectory("clip_once").toString
+    squares("id", (0, 0, 4, 4), (10, 10, 12, 12)).write.mode("overwrite").parquet(dir)
+    val clipped = graft.join.Clip.clipByRect(spark.read.parquet(dir), 1, 1, 3, 3)
     val plan = clipped.queryExecution.executedPlan.toString
     val n = "UDF\\(".r.findAllIn(plan).length
     assert(n == 1, s"expected exactly one clip-UDF evaluation in the plan, got $n:\n$plan")
