@@ -769,7 +769,23 @@ object Dedup {
     * must still collapse to one cluster, which a one-hop min-neighbor map
     * gets wrong.
     *
-    * Scale posture: each round computes per-node neighborhood minima via
+    * Path choice, made at execution time: the result is one
+    * [[graft.plans.ConnectedComponents]] plan node, so building it runs no
+    * Spark job. When it executes, integral ids first take a bounded LOCAL
+    * path: one job runs a min-root union-find in each partition of the
+    * pairs (self-loops included) and returns its star forest; one task
+    * merges the forests with the same union-find, and the driver
+    * parallelizes the merged labels, which are IDENTICAL to the
+    * star-contraction fixpoint (component = min member id). The guard
+    * `spark.graft.cc.localEdgeLimit` (default 1 000 000), read once when
+    * the frame is built, bounds union-find NODES: a partition or the merge
+    * holding more gives up at once, so task and driver memory stay bounded.
+    * A pair graph from a dedup pass has about as many nodes as near-dup
+    * documents, far fewer than the corpus, so it usually fits.
+    * Graphs past the guard, and non-integral ids, run the distributed loop
+    * below inside the same execution, over the pairs' rows.
+    *
+    * Loop scale posture: each round computes per-node neighborhood minima via
     * `groupBy(u).agg(min(v))` (map-side partial aggregation — a hub node's
     * min reaches the reducer as one pre-combined row per upstream
     * partition, never its full neighborhood) joined back on `u`; that
@@ -794,121 +810,16 @@ object Dedup {
     * coarser, never-duplicated labeling) and a warning is logged. */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
                           maxIterations: Int = 50): DataFrame = {
-    val init = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
+    // both ends share the type an (a, b) array would give them, as the
+    // node ids of the output do
+    val idType = pairs.select(array(col(aCol), col(bCol))).schema.head.dataType
+      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
+    val init = pairs.select(col(aCol).cast(idType).as("u"), col(bCol).cast(idType).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull)
-    val sc = init.sparkSession.sparkContext
-    // localCheckpoint registers its materialized RDD in the persistent-RDD
-    // registry; snapshot the registry around the call so the blocks can be
-    // dropped once the next round supersedes them
-    def checkpointTracked(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.collect { case (k, r) if !before(k) => r }.toSeq)
-    }
-    // keep self-loops out of the star steps but their nodes in the output
-    val nodes = init.select(explode(array(col("u"), col("v"))).as("id")).distinct()
-    var (edges, edgeRdds) = checkpointTracked(
-      init.filter(col("u") =!= col("v"))
-        .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-        .distinct())
-    var edgeCount = edges.count()
-    // ---- bounded LOCAL fast path (optimization round 21) -----------------
-    // The distinct edge set is tiny compared to the corpus whenever the
-    // pair graph came from a dedup pass (edges ≈ near-dup pairs, not docs):
-    // when it fits under a hard row-count guard, a driver-side union-find
-    // with min-root unions produces labels IDENTICAL to the star-contraction
-    // fixpoint (component label = min member id) in ONE job instead of
-    // ~5 shuffles × O(log n) rounds + per-round checkpoint/count/except
-    // jobs. Same bounded-build-side posture as SpatialJoin's broadcast
-    // guard: the guard is an exact count on the already-materialized
-    // checkpoint, the collected payload is two integral ids per edge, and
-    // graphs past the guard (or with non-integral ids) take the distributed
-    // loop unchanged. Labels broadcast back, so the node table still never
-    // shuffles (before/after evidence: OPTIMIZATION_r21.md, q112/q149/
-    // q150/q152).
     val localLimit =
       try pairs.sparkSession.conf.get("spark.graft.cc.localEdgeLimit", "1000000").toLong
       catch { case _: NumberFormatException => 1000000L }
-    val integralIds = edges.schema.fields.forall(_.dataType match {
-      case _: org.apache.spark.sql.types.ByteType => true
-      case _: org.apache.spark.sql.types.ShortType => true
-      case _: org.apache.spark.sql.types.IntegerType => true
-      case _: org.apache.spark.sql.types.LongType => true
-      case _ => false
-    })
-    if (edgeCount > 0 && edgeCount <= localLimit && integralIds) {
-      val idType = edges.schema("u").dataType
-      val collected = edges
-        .select(col("u").cast("long"), col("v").cast("long")).collect()
-      edgeRdds.foreach(_.unpersist(blocking = false))
-      val parent = new scala.collection.mutable.LongMap[Long](collected.length * 2)
-      def find(x0: Long): Long = {
-        var r = x0
-        while (parent(r) != r) r = parent(r)
-        var c = x0
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      collected.foreach { row =>
-        val u = row.getLong(0); val v = row.getLong(1)
-        if (!parent.contains(u)) parent(u) = u
-        if (!parent.contains(v)) parent(v) = v
-        val ru = find(u); val rv = find(v)
-        // min-root union keeps the star-contraction invariant: the
-        // component label is the smallest member id
-        if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
-      }
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val labels = parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "__root")
-        .select(col("id").cast(idType).as("id"),
-          col("__root").cast(idType).as("__root"))
-      return nodes.join(broadcast(labels), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__root"), col("id")).as("component"))
-    }
-    // ---- distributed star-contraction loop (the 100 TB path) -------------
-    var converged = edgeCount == 0L
-    var it = 0
-    while (!converged && it < maxIterations) {
-      // large-star: for each node u, link every strictly-larger neighbor to
-      // the minimum of its neighborhood (including u itself)
-      val sym = edges.select(col("u"), col("v"))
-        .union(edges.select(col("v").as("u"), col("u").as("v")))
-      val largeMin = sym.groupBy(col("u")).agg(min(col("v")).as("__nm"))
-      val large = sym.join(largeMin, Seq("u"))
-        .withColumn("__m", least(col("__nm"), col("u")))
-        .filter(col("v") > col("u"))
-        .select(greatest(col("v"), col("__m")).as("u"), least(col("v"), col("__m")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // small-star: edges already point (larger -> smaller); link each
-      // smaller neighbor AND u itself to the minimum smaller neighbor
-      val smallMin = large.groupBy(col("u")).agg(min(col("v")).as("__m"))
-      val (small, smallRdds) = checkpointTracked(
-        large.join(smallMin, Seq("u")).select(col("v").as("u"), col("__m").as("v"))
-          .union(smallMin.select(col("u"), col("__m").as("v")))
-          .filter(col("u") =!= col("v"))
-          .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-          .distinct())
-      // both sides are distinct (u, v) sets: same count + nothing in
-      // small∖edges ⇒ equal sets; the count gate skips exceptAll whenever
-      // the edge set is still shrinking
-      val smallCount = small.count()
-      converged = smallCount == edgeCount && small.exceptAll(edges).isEmpty
-      edgeRdds.foreach(_.unpersist(blocking = false))
-      edges = small; edgeRdds = smallRdds; edgeCount = smallCount
-      it += 1
-    }
-    if (!converged)
-      System.err.println(s"[graft] connectedComponents: no fixpoint after $maxIterations rounds" +
-        " — labels fall back to min-known-root per node (coarser clusters possible)")
-    // fixpoint edges form stars (child -> root); aggregate min-per-node so a
-    // non-converged residual (multiple edges per u) still yields exactly one
-    // label per node. Roots and isolated nodes (self-loop-only inputs) label
-    // themselves.
-    val roots = edges.groupBy(col("u").as("id")).agg(min(col("v")).as("__root"))
-    nodes.join(roots, Seq("id"), "left")
-      .select(col("id"), coalesce(col("__root"), col("id")).as("component"))
+    graft.plans.ConnectedComponents(init, localLimit, maxIterations)
   }
 
   /** INCREMENTAL [[connectedComponents]] — fold a new batch's near-dup

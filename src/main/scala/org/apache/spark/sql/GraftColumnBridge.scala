@@ -15,4 +15,12 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A DataFrame over an RDD of internal rows of `schema` (the bridge to the
+    * private[sql] `internalCreateDataFrame`) — used by physical nodes that
+    * run DataFrame steps over their child's rows. */
+  def ofInternalRows(spark: SparkSession,
+                     rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                     schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

@@ -25,28 +25,32 @@ class GpkgSpec extends AnyFunSuite {
   test("cells layer: schema, typed attributes, polygon geometry, EPSG CRS") {
     val gdf = Gpkg.read(spark, fixture, layer = Some("cells"))
     val df = gdf.df.cache()
-    assert(df.columns.toSeq == Seq("fid", "name", "region", "score", "flag", "geom"))
-    assert(df.count() == 25)
-    assert(gdf.activeCrs.contains("EPSG:4326"))
-    assert(gdf.geometryCol == "geom")
-    // typed attributes survive: int pk (rowid alias), text, long, double, boolean
-    val r = df.filter(col("name") === "cell7").select("fid", "region", "score", "flag")
-      .as[(Long, Long, Double, Boolean)].head()
-    assert(r == ((8L, 2L, 10.5, true)))
-    // geometry decodes to the expected 20x20 cells
-    val area = df.select(sum(st_area(col("geom")))).as[Double].head()
-    assert(area == 25 * 400.0)
+    try {
+      assert(df.columns.toSeq == Seq("fid", "name", "region", "score", "flag", "geom"))
+      assert(df.count() == 25)
+      assert(gdf.activeCrs.contains("EPSG:4326"))
+      assert(gdf.geometryCol == "geom")
+      // typed attributes survive: int pk (rowid alias), text, long, double, boolean
+      val r = df.filter(col("name") === "cell7").select("fid", "region", "score", "flag")
+        .as[(Long, Long, Double, Boolean)].head()
+      assert(r == ((8L, 2L, 10.5, true)))
+      // geometry decodes to the expected 20x20 cells
+      val area = df.select(sum(st_area(col("geom")))).as[Double].head()
+      assert(area == 25 * 400.0)
+    } finally df.unpersist()
   }
 
   test("pts layer: 401 rows, overflow-page text survives, NULL geometry kept") {
     val df = Gpkg.read(spark, fixture, layer = Some("pts")).df.cache()
-    assert(df.count() == 401)
-    val big = df.filter(col("val") === 123).select("label").as[String].head()
-    assert(big.length == 5004 && big.startsWith("big:") && big.endsWith("xxx"),
-      "overflow-chain payload must reassemble exactly")
-    assert(df.filter(col("geom").isNull).select("label").as[String].collect().toSeq == Seq("nogeom"))
-    val xs = df.filter(col("val") === 10).select(st_x(col("geom"))).as[Double].head()
-    assert(xs == 70.0) // (10*7) % 100
+    try {
+      assert(df.count() == 401)
+      val big = df.filter(col("val") === 123).select("label").as[String].head()
+      assert(big.length == 5004 && big.startsWith("big:") && big.endsWith("xxx"),
+        "overflow-chain payload must reassemble exactly")
+      assert(df.filter(col("geom").isNull).select("label").as[String].collect().toSeq == Seq("nogeom"))
+      val xs = df.filter(col("val") === 10).select(st_x(col("geom"))).as[Double].head()
+      assert(xs == 70.0) // (10*7) % 100
+    } finally df.unpersist()
   }
 
   test("default layer is the first feature table; unknown layer raises") {

@@ -664,6 +664,159 @@ class VecAndDedupSpec extends AnyFunSuite {
     assert(full.forall(_._2 == 1L))
   }
 
+  /** `build`'s result and the Spark jobs started while it ran. Listener
+    * events are asynchronous but delivered in order, so a tiny marker job
+    * before and after flushes the bus: once the marker's start lands, every
+    * earlier event has too. */
+  private def jobsDuring[T](build: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      def flushMarker(): Unit = {
+        val seen = jobs.get()
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 10e9.toLong
+        while (jobs.get() <= seen && System.nanoTime() < deadline) Thread.sleep(20)
+      }
+      flushMarker()
+      val before = jobs.get()
+      val out = build
+      flushMarker()
+      (out, jobs.get() - before - 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("connected-components family runs no job at construction") {
+    val dir = java.nio.file.Files.createTempDirectory("cc_lazy").toString
+    try {
+      Seq((1L, 2L), (3L, 2L), (3L, 4L), (10L, 11L), (7L, 7L)).toDF("id_a", "id_b")
+        .write.parquet(s"$dir/pairs")
+      Seq(("b", "a"), ("c", "b"), ("y", "x"), ("z", "z")).toDF("id_a", "id_b")
+        .write.parquet(s"$dir/spairs")
+      Seq((2L, 3L), (4L, 10L), (20L, 21L)).toDF("id_a", "id_b").write.parquet(s"$dir/newpairs")
+      (1L to 12L).map(i => (i, i * 7 % 5)).toDF("id", "score").write.parquet(s"$dir/scored")
+      // reading a parquet directory infers its schema with a job: read first
+      val pairs = spark.read.parquet(s"$dir/pairs")
+      val spairs = spark.read.parquet(s"$dir/spairs")
+      val newPairs = spark.read.parquet(s"$dir/newpairs")
+      val scored = spark.read.parquet(s"$dir/scored")
+      val ((cc, scc, inc, keep, split), jobs) = jobsDuring((
+        Dedup.connectedComponents(pairs),
+        Dedup.connectedComponents(spairs),
+        Dedup.connectedComponentsIncremental(Dedup.connectedComponents(pairs), newPairs),
+        Dedup.keepClusterRepresentatives(scored, pairs, "id", "score"),
+        Dedup.clusterAwareSplit(scored.select("id"), pairs, "id", valFraction = 0.5)))
+      assert(jobs == 0, s"building the labeling frames submitted $jobs job(s)")
+
+      val labels = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L, 7L -> 7L)
+      assert(cc.as[(Long, Long)].collect().toMap == labels)
+      assert(scc.as[(String, String)].collect().toMap ==
+        Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x", "z" -> "z"))
+      assert(inc.as[(Long, Long)].collect().toMap ==
+        labels.map { case (id, c) => id -> (if (c == 10L) 1L else c) } ++
+          Map(20L -> 20L, 21L -> 20L))
+      // scores i * 7 % 5: {1..4} keeps 2 (score 4), {10, 11} keeps 11 (score 2)
+      assert(keep.select("id", "component", "csize").as[(Long, Long, Long)].collect().toSet ==
+        Set((2L, 1L, 4L), (11L, 10L, 2L), (7L, 7L, 1L)) ++
+          Seq(5L, 6L, 8L, 9L, 12L).map(i => (i, i, 1L)))
+      val splitRows = split.select("id", "component", "split").as[(Long, Long, String)].collect()
+      assert(splitRows.map(r => r._1 -> r._2).toMap ==
+        (1L to 12L).map(i => i -> labels.getOrElse(i, i)).toMap)
+      assert(splitRows.groupBy(_._2).values.forall(_.map(_._3).distinct.length == 1))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  /** Collects a labeling frame itself (a typed view would plan and run a
+    * copy), so [[tookLoop]] can read the node that ran. */
+  private def labelsOf[T](df: DataFrame): Map[T, T] =
+    df.collect().map(r => r.getAs[T](0) -> r.getAs[T](1)).toMap
+
+  /** The executed connected-components node of an already-collected frame. */
+  private def ccExec(df: DataFrame): graft.plans.ConnectedComponentsExec = {
+    object aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val found = aqe.collect(df.queryExecution.executedPlan) {
+      case e: graft.plans.ConnectedComponentsExec => e
+    }
+    assert(found.length == 1, df.queryExecution.executedPlan.toString)
+    found.head
+  }
+  private def tookLoop(df: DataFrame): Boolean = {
+    val e = ccExec(df)
+    val (local, rounds) = (e.metrics("localLabels").value, e.metrics("loopRounds").value)
+    assert((local == 0) != (rounds == 0), s"exactly one path runs: $local labels, $rounds rounds")
+    rounds > 0
+  }
+
+  test("connectedComponents: the guard is read at construction, the path chosen at execution") {
+    val limitKey = "spark.graft.cc.localEdgeLimit"
+    val pairs = (Seq((1L, 2L), (2L, 3L), (9L, 3L), (5L, 6L), (7L, 7L)) ++
+      (100L until 130L).map(i => (i + 1, i))).toDF("id_a", "id_b")
+    spark.conf.set(limitKey, "0")
+    val forced = try Dedup.connectedComponents(pairs) finally spark.conf.unset(limitKey)
+    val loop = labelsOf[Long](forced)
+    assert(tookLoop(forced), "a frame built with the guard at 0 takes the loop")
+    val default = Dedup.connectedComponents(pairs)
+    val local = labelsOf[Long](default)
+    assert(!tookLoop(default))
+    assert(loop == local)
+    assert(local(9L) == 1L && local(7L) == 7L && local(130L) == 100L)
+  }
+
+  test("connectedComponents: a partition or a total over the guard falls back to the loop") {
+    val limitKey = "spark.graft.cc.localEdgeLimit"
+    // one slice per partition: partition 0 holds the 21-node chain 0..20,
+    // partitions 1-3 a 4-node chain each; (20, 101) and (204, 301) link
+    // chains held by different partitions, so the merge must join
+    // them: components {0..20, 101..104} and {201..204, 301..304}
+    def chain4(b: Long) = Seq((b + 2, b + 1), (b + 3, b + 2), (b + 4, b + 3))
+    val slices = Seq((0L until 20L).map(i => (i, i + 1)),
+      chain4(100) :+ ((20L, 101L)), chain4(200) :+ ((204L, 204L)), chain4(300) :+ ((204L, 301L)))
+    val pairs = spark.sparkContext.parallelize(slices, 4).flatMap(identity).toDF("id_a", "id_b")
+    assert(pairs.rdd.glom().map(_.length).collect().toSeq == Seq(20, 4, 4, 4))
+    def labelsAt(limit: Long): (Map[Long, Long], Boolean) = {
+      spark.conf.set(limitKey, limit.toString)
+      val df = try Dedup.connectedComponents(pairs) finally spark.conf.unset(limitKey)
+      (labelsOf[Long](df), tookLoop(df))
+    }
+    val (local, localLoop) = labelsAt(1000)
+    assert(!localLoop)
+    val (partOver, partLoop) = labelsAt(10) // partition 0 alone holds 21 nodes
+    assert(partLoop && partOver == local)
+    val (totalOver, totalLoop) = labelsAt(25) // each partition fits, the merge holds 33
+    assert(totalLoop && totalOver == local)
+    assert(local.size == 33)
+    assert(((0L to 20L) ++ (101L to 104L)).forall(local(_) == 0L))
+    assert(((201L to 204L) ++ (301L to 304L)).forall(local(_) == 201L))
+  }
+
+  test("connectedComponents: string ids label each node with its component's smallest string") {
+    val rng = new scala.util.Random(11)
+    val names = (0 until 60).map(i => f"n${(i * 37) % 60}%02d")
+    val edges = Seq.fill(45)((names(rng.nextInt(60)), names(rng.nextInt(60))))
+    // driver-side union-find: union points the larger root at the smaller
+    val parent = scala.collection.mutable.Map[String, String]()
+    def find(x: String): String = { var r = x; while (parent(r) != r) r = parent(r); r }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val expected = parent.keys.map(k => k -> find(k)).toMap
+    val df = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+    assert(labelsOf[String](df) == expected)
+    assert(tookLoop(df), "non-integral ids take the loop")
+  }
+
+  test("connectedComponents output joins with itself") {
+    val cc = Dedup.connectedComponents(Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b"))
+    assert(cc.join(cc, "id").toDF("id", "c1", "c2").as[(Long, Long, Long)].collect().toSet ==
+      Set((1L, 1L, 1L), (2L, 1L, 1L), (3L, 1L, 1L), (5L, 5L, 5L), (6L, 5L, 5L)))
+  }
+
   test("minhashDedup canonicalizes transitive chains A~B~C without a direct A~C pair") {
     // B shares >=90% shingles with both A and C, but A and C differ enough
     // that only the chain connects them — canonical id must still be A's
