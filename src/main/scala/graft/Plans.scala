@@ -12,8 +12,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = new StringBuilder
-    // the sections install the rules they show, so none are installed here
-    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
+    val spark = GraftSession(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     def section(title: String, note: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
@@ -102,7 +101,6 @@ object Plans {
       "No readBbox API here — a plain filter(st_intersects(g, lit)) on a GeoParquet frame. The " +
         "Catalyst rule injects bbox.xmin/xmax/ymin/ymax conjuncts, which reach PushedFilters and " +
         "prune row groups; the exact JTS predicate runs only on survivors.") {
-      graft.plans.BboxFastPath.install(spark)
       val tmp = java.nio.file.Files.createTempDirectory("plans_rule").toString
       graft.io.GeoParquet.write(GeoDataFrame(pts.drop("c_comment")), s"$tmp/pts", spatialSort = true)
       graft.io.GeoParquet.read(spark, s"$tmp/pts").cx(10, 20, 60, 80).df
@@ -260,7 +258,6 @@ object Plans {
         "to Catalyst Hypot over the raw coordinates (bit-exact — JTS point " +
         "distance IS Math.hypot), keeping the hot loop pure arithmetic " +
         "inside WholeStageCodegen. Stored WKB columns are never touched.") {
-      graft.plans.GeomSimplify.install(spark)
       val l = spark.read.parquet(s"$dir/lineitem.parquet")
       l.select(st_distance(
           st_point((col("l_partkey") % 50).cast("double"), (col("l_suppkey") % 50).cast("double")),
@@ -320,7 +317,6 @@ object Plans {
         "original condition refines the candidates — bit-identical results " +
         "with a real equi-join key (note the hash join on __graft_asj " +
         "cells and the absence of any nested-loop join below).") {
-      graft.plans.AutoSpatialJoin.install(spark)
       val tmp = java.nio.file.Files.createTempDirectory("plans_asj").toString
       spark.read.parquet(s"$dir/customer.parquet")
         .filter(col("c_custkey") <= 500)

@@ -70,8 +70,16 @@ spark.sql.adaptive.advisoryPartitionSizeInBytes=64m  # Spark default
 spark.sql.shuffle.partitions=<2-3x total executor cores>
 spark.sql.files.maxPartitionBytes=128m           # scan-side task sizing
 spark.sql.codegen.cache.maxEntries=5000          # see below
-spark.sql.extensions=graft.plans.GraftExtensions # bbox scan pushdown rule
 ```
+
+The engine's optimizer rules, planner strategies and SQL functions are
+not a conf line: call `graft.GraftSession.install(spark)` on the live
+session (`GraftSession(...)` does it for the engine's own sessions). It
+adds the rules through `spark.experimental`, so they run in Spark's
+"User Provided Optimizers" batch, after every other operator
+optimization, as in every oracle run, bench and test; a rule given to
+`spark.sql.extensions` would run in the earlier operator-optimization
+batches instead.
 
 `codegen.cache.maxEntries`: the default 100-entry generated-class cache
 thrashes on a many-operator pipeline (one heavy pair-join query alone
@@ -680,7 +688,6 @@ where distinct sigs << rows) sits far below it.
     // cell explode, cached refine) from the shared grid machinery.
     if (onlyOp.forall(o => "auto predicate join stored".contains(o) ||
         "sjoin grid stored".contains(o))) {
-      graft.plans.AutoSpatialJoin.install(spark)
       val asjTmp = java.nio.file.Files.createTempDirectory("graft_scale_asj").toString
       cells.select(col("n_nationkey"), col("geometry").as("cell_geom"))
         .write.mode("overwrite").parquet(s"$asjTmp/cells")

@@ -82,7 +82,7 @@ object Dxf {
   }
 
   private def readAll(spark: SparkSession, path: String): GeoDataFrame = {
-    val paths = resolvePaths(spark, path)
+    val paths = IoFilters.resolvePaths(spark, path, ".dxf")
     require(paths.nonEmpty, s"no .dxf files at $path")
     val schema = StructType(Seq(
       StructField("Layer", StringType, nullable = true),
@@ -846,15 +846,5 @@ object Dxf {
           s"DXF export: ${other.getGeometryType} has no single-entity DXF form " +
             "(the format has no multi-geometry entity) — explode to single parts first")
     }
-  }
-
-  private def resolvePaths(spark: SparkSession, path: String): Seq[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    if (path.toLowerCase.endsWith(".dxf")) Seq(path)
-    else if (fs.isDirectory(p))
-      fs.listStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".dxf")).sorted.toSeq
-    else fs.globStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".dxf")).sorted.toSeq
   }
 }

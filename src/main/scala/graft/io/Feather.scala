@@ -31,7 +31,7 @@ object Feather {
            bbox: Option[(Double, Double, Double, Double)] = None,
            mask: Option[Array[Byte]] = None,
            where: Option[String] = None): GeoDataFrame = {
-    val firstFile = resolvePaths(spark, path).headOption.getOrElse(
+    val firstFile = IoFilters.resolvePaths(spark, path, ".feather", ".arrow").headOption.getOrElse(
       throw new IllegalArgumentException(s"no .feather/.arrow files at $path"))
     val (schema, geomCol, crs) = driverSchema(spark, firstFile)
 
@@ -311,16 +311,6 @@ object Feather {
   private def isFeatherName(p: String): Boolean = {
     val l = p.toLowerCase
     l.endsWith(".feather") || l.endsWith(".arrow")
-  }
-
-  private def resolvePaths(spark: SparkSession, path: String): Seq[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    if (isFeatherName(path)) Seq(path)
-    else if (fs.isDirectory(p))
-      fs.listStatus(p).map(_.getPath.toString).filter(isFeatherName).sorted.toSeq
-    else fs.globStatus(p).map(_.getPath.toString).filter(isFeatherName).sorted.toSeq
   }
 
   /** Seekable read channel over a Hadoop input stream (footer reads). */

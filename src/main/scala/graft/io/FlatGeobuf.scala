@@ -103,7 +103,7 @@ object FlatGeobuf {
            rows: Option[Int] = None,
            mask: Option[Array[Byte]] = None,
            where: Option[String] = None): GeoDataFrame = {
-    val paths = resolvePaths(spark, path)
+    val paths = IoFilters.resolvePaths(spark, path, ".fgb")
     require(paths.nonEmpty, s"no .fgb files at $path")
     // driver: schema + CRS from the first file's header (headers are small)
     val head = parseHeader(readHead(spark, paths.head, 1 << 20))
@@ -542,16 +542,6 @@ object FlatGeobuf {
   }
 
   // --------------------------------------------------------------- helpers
-
-  private def resolvePaths(spark: SparkSession, path: String): Seq[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    if (path.toLowerCase.endsWith(".fgb") && fs.isFile(p)) Seq(path)
-    else if (fs.isDirectory(p))
-      fs.listStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".fgb")).sorted.toSeq
-    else fs.globStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".fgb")).sorted.toSeq
-  }
 
   private def readHead(spark: SparkSession, path: String, maxLen: Int): Array[Byte] = {
     val hconf = spark.sparkContext.hadoopConfiguration

@@ -38,7 +38,7 @@ object Gpkg {
            mask: Option[Array[Byte]] = None,
            where: Option[String] = None): GeoDataFrame = {
     // driver: schema + CRS from the first file's metadata pages
-    val firstFile = resolvePaths(spark, path).headOption.getOrElse(
+    val firstFile = IoFilters.resolvePaths(spark, path, ".gpkg").headOption.getOrElse(
       throw new IllegalArgumentException(s"no .gpkg files at $path"))
     val (layerName, geomCol, schema, pkIdx, crs) = withDriverSource(spark, firstFile) { src =>
       val geoCols = geometryColumns(src)
@@ -532,15 +532,5 @@ object Gpkg {
     val in = fs.open(p)
     try f(new Sqlite.StreamSource(in, fs.getFileStatus(p).getLen))
     finally in.close()
-  }
-
-  private def resolvePaths(spark: SparkSession, path: String): Seq[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    if (path.toLowerCase.endsWith(".gpkg")) Seq(path)
-    else if (fs.isDirectory(p))
-      fs.listStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".gpkg")).sorted.toSeq
-    else fs.globStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".gpkg")).sorted.toSeq
   }
 }

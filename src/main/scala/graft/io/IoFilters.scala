@@ -3,12 +3,33 @@ package graft.io
 import graft.api.GeoDataFrame
 import graft.functions.GeoFunctions.st_intersects
 import graft.geom.{GeomOps, Wkb}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Shared `read_file`-style spatial pushdown for the engine's readers
   * (ref io/file.py:197-239: `bbox` and `mask` are mutually exclusive;
-  * both keep features INTERSECTING the filter geometry). */
+  * both keep features INTERSECTING the filter geometry), and the path
+  * resolution they share. */
 private[io] object IoFilters {
+
+  /** The files a reader reads at `path`, sorted: the file itself, the files
+    * in a directory, or a glob's matches, keeping names that end in one of
+    * `exts` (lower case, with the dot). A path that names nothing throws
+    * `FileNotFoundException` naming it, at the call, not at the first
+    * action. */
+  def resolvePaths(spark: SparkSession, path: String, exts: String*): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def keep(f: String): Boolean = exts.exists(f.toLowerCase.endsWith)
+    if (keep(path) && fs.isFile(p)) Seq(path)
+    else {
+      val found =
+        if (fs.isDirectory(p)) fs.listStatus(p)
+        else Option(fs.globStatus(p)).getOrElse( // null: a missing plain path
+          throw new java.io.FileNotFoundException(s"no file or directory at $path"))
+      found.map(_.getPath.toString).filter(keep).sorted.toSeq
+    }
+  }
 
   /** JSON string literal with full escaping — CRS values are often WKT,
     * which is full of double quotes. */

@@ -52,7 +52,7 @@ object MapInfoMif {
   }
 
   private def readAll(spark: SparkSession, path: String): GeoDataFrame = {
-    val mifPaths = resolveMifPaths(spark, path)
+    val mifPaths = IoFilters.resolvePaths(spark, path, ".mif")
     require(mifPaths.nonEmpty, s"no .mif files at $path")
     // driver: schema + CRS from the first header (headers must agree, like
     // the multi-.shp read)
@@ -584,16 +584,6 @@ object MapInfoMif {
   }
 
   // ------------------------------------------------------------- helpers
-
-  private def resolveMifPaths(spark: SparkSession, path: String): Seq[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    if (path.toLowerCase.endsWith(".mif")) Seq(path)
-    else if (fs.isDirectory(p))
-      fs.listStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".mif")).sorted.toSeq
-    else fs.globStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".mif")).sorted.toSeq
-  }
 
   private def readBytes(spark: SparkSession, path: String, maxLen: Int): Option[Array[Byte]] = {
     val hconf = spark.sparkContext.hadoopConfiguration

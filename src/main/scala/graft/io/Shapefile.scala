@@ -50,7 +50,7 @@ object Shapefile {
 
   private def readAll(spark: SparkSession, path: String): GeoDataFrame = {
     if (path.toLowerCase.endsWith(".zip")) return readZip(spark, path)
-    val shpPaths = resolveShpPaths(spark, path)
+    val shpPaths = IoFilters.resolvePaths(spark, path, ".shp")
     require(shpPaths.nonEmpty, s"no .shp files at $path")
 
     // driver: schema from the first file's DBF header + CRS from .prj
@@ -619,21 +619,6 @@ object Shapefile {
   }
 
   // --------------------------------------------------------------- helpers
-
-  private def resolveShpPaths(spark: SparkSession, path: String): Seq[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    if (path.toLowerCase.endsWith(".shp") && fs.exists(p)) Seq(path)
-    else if (fs.isDirectory(p))
-      fs.listStatus(p).map(_.getPath.toString).filter(_.toLowerCase.endsWith(".shp")).sorted.toSeq
-    else {
-      // null: a non-glob path that does not exist
-      val matched = Option(fs.globStatus(p)).getOrElse(
-        throw new java.io.FileNotFoundException(s"no shapefile or directory at $path"))
-      matched.map(_.getPath.toString).filter(_.toLowerCase.endsWith(".shp")).sorted.toSeq
-    }
-  }
 
   private def sibling(shpPath: String, ext: String): String =
     shpPath.replaceAll("\\.shp$", "." + ext)

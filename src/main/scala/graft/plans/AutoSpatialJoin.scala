@@ -107,17 +107,6 @@ object AutoSpatialJoin extends Rule[LogicalPlan] {
   private[graft] def gridStatsBuilds: java.util.concurrent.atomic.AtomicLong =
     graft.join.GridMemo.statsBuilds
 
-  /** Append to a live session, after [[GeomSimplify]] (constructed-geometry
-    * join conditions must fuse to arithmetic before this rule looks for the
-    * stored-geometry shape); cluster deployments get the same order from
-    * `graft.plans.GraftExtensions`. */
-  def install(spark: SparkSession): Unit = {
-    GeomSimplify.install(spark)
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
   private def splitConjuncts(e: Expression): Seq[Expression] = e match {
     case And(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
     case other     => Seq(other)

@@ -27,17 +27,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, StructType}
   */
 object BboxFastPath extends Rule[LogicalPlan] {
 
-  /** Append the engine's Catalyst rules (this one + [[GeomSimplify]]) to a
-    * LIVE session's extra optimizations (tests, engine session builders).
-    * Cluster deployments can instead set
-    * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    GeomSimplify.install(spark)
-    AutoSpatialJoin.install(spark)
-  }
+  /** Forwards to [[graft.GraftSession.install]], for callers that build
+    * their own session. */
+  def install(spark: SparkSession): Unit = graft.GraftSession.install(spark)
 
   private def isBboxStruct(dt: DataType): Boolean = dt match {
     case s: StructType => Seq("xmin", "ymin", "xmax", "ymax").forall(n =>
@@ -129,17 +121,5 @@ object BboxFastPath extends Rule[LogicalPlan] {
         litEnv(l).toSeq.flatMap(intersectsEnv(_, d.doubleValue()))
       case _ => Nil
     }
-  }
-}
-
-/** `spark.sql.extensions` entry point registering the engine's Catalyst
-  * rules on session build. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => BboxFastPath)
-    e.injectOptimizerRule(_ => GeomSimplify)
-    // after GeomSimplify: constructed-geometry join conditions fuse to
-    // arithmetic first; the stored-geometry shapes left over grid-join
-    e.injectOptimizerRule(_ => AutoSpatialJoin)
   }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftColumnBridge.{ofInternalRows, ofRows}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, GenericInternalRow, UnsafeProjection}
@@ -33,11 +33,12 @@ case class ConnectedComponents(u: Attribute, v: Attribute, output: Seq[Attribute
 object ConnectedComponents {
 
   /** The labeling frame (id, component) over `pairs`, whose two columns
-    * (u, v) share one type and hold no nulls. Installs
-    * [[PlanConnectedComponents]] on the session. */
+    * (u, v) share one type and hold no nulls. Installs the engine's
+    * planning, [[PlanConnectedComponents]] among it, on the session
+    * ([[graft.GraftSession.install]]). */
   def apply(pairs: DataFrame, localLimit: Long, maxIterations: Int): DataFrame = {
     val spark = pairs.sparkSession
-    install(spark)
+    graft.GraftSession.install(spark)
     val plan = pairs.queryExecution.analyzed
     val Seq(u, v) = plan.output
     val out = Seq(AttributeReference("id", u.dataType, nullable = false)(),
@@ -47,11 +48,6 @@ object ConnectedComponents {
     ofRows(spark, ConnectedComponents(u, v, out, localLimit, maxIterations, plan))
       .select(col("id").as("id"), col("component").as("component"))
   }
-
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(PlanConnectedComponents))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ PlanConnectedComponents
 
   object PlanConnectedComponents extends SparkStrategy {
     def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

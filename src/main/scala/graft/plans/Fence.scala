@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftColumnBridge.ofRows
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -35,16 +35,13 @@ object Fence {
 
   /** `df` behind a fence: filters and projections written over the result
     * read its columns instead of re-evaluating their expressions. Installs
-    * [[PlanFence]] on the session. */
+    * the engine's planning, [[PlanFence]] among it, on the session
+    * ([[graft.GraftSession.install]]). */
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
+    graft.GraftSession.install(spark)
     ofRows(spark, Fence(df.queryExecution.analyzed))
   }
-
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(PlanFence))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ PlanFence
 
   /** Plans a Fence as its child, the way SpecialLimits plans a plain root. */
   object PlanFence extends SparkStrategy {

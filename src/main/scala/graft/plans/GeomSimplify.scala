@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -36,13 +35,6 @@ import graft.functions.expr.{StArea, StBoxArea, StBoxContainsBox, StBoxIntersect
   * constructions in the same expression tree — a WKB column read from
   * storage is never touched. */
 object GeomSimplify extends Rule[LogicalPlan] {
-
-  /** Append to a live session (same idiom as [[BboxFastPath.install]]);
-    * cluster deployments get both rules via `graft.plans.GraftExtensions`. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 
   private def dist(ax: Expression, ay: Expression,
                    bx: Expression, by: Expression): Expression =

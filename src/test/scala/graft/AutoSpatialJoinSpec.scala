@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions._
 import graft.geom.{GeomOps, Wkb}
 import graft.join.SpatialJoin
@@ -20,8 +19,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class AutoSpatialJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
-
-  private def installed(): Unit = AutoSpatialJoin.install(spark)
 
   private def ptsDf(n: Int, seed: Int): (DataFrame, Seq[(Int, Geometry)]) = {
     val rng = new scala.util.Random(seed)
@@ -48,7 +45,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("st_intersects predicate join: grid plan, results equal brute force and sjoin") {
-    installed()
     val (pts, ptRows) = ptsDf(400, 7)
     val (boxes, boxRows) = boxDf(25, 8)
     val q = pts.join(boxes, st_intersects(col("ga"), col("gb"))).select("pid", "bid")
@@ -68,7 +64,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("st_dwithin and st_distance<=d forms rewrite with bbox expansion") {
-    installed()
     val (a, aRows) = ptsDf(200, 11)
     val b0 = ptsDf(200, 12)
     val (b, bRows) = (b0._1.withColumnRenamed("ga", "gb").withColumnRenamed("pid", "bid"), b0._2)
@@ -93,7 +88,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("st_contains with right-side geometry as first operand (swapped sides)") {
-    installed()
     val (pts, ptRows) = ptsDf(300, 21)
     val (boxes, boxRows) = boxDf(20, 22)
     val q = pts.join(boxes, st_contains(col("gb"), col("ga"))).select("pid", "bid")
@@ -105,7 +99,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("every bbox-implied predicate rewrites: touches/crosses/overlaps/covers/covered_by") {
-    installed()
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     // lattice boxes: neighbours share edges (touches), big cells cover the
     // small boxes planted inside them, random segments cross cells, and
@@ -159,7 +152,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("extra conjuncts ride along; NULL and EMPTY geometries drop like the naive plan") {
-    installed()
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     val rng = new scala.util.Random(31)
     val ptRows = (0 until 150).map(i => (i, GeomOps.point(rng.nextDouble() * 50, rng.nextDouble() * 50)))
@@ -178,7 +170,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("two spatial conjuncts: the first drives the grid, the second is refine-replayed") {
-    installed()
     val (pts, ptRows) = ptsDf(250, 61)
     val (boxes, boxRows) = boxDf(20, 62)
     val q = pts.join(boxes,
@@ -194,8 +185,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("SQL spelling: JOIN ON st_intersects over stored WKB plans as the grid join") {
-    installed()
-    GeoFunctions.registerAll(spark)
     val (pts, ptRows) = ptsDf(250, 41)
     val (boxes, boxRows) = boxDf(15, 42)
     pts.createOrReplaceTempView("asj_pts")
@@ -210,7 +199,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("LEFT OUTER predicate join rewrites: null-extension, NULL/EMPTY outer rows survive") {
-    installed()
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     val (pts0, ptRows) = ptsDf(200, 71)
     // NULL and EMPTY left geometries: predicate never true → must come back
@@ -240,7 +228,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("RIGHT OUTER predicate join rewrites symmetrically") {
-    installed()
     val (pts, ptRows) = ptsDf(150, 81)
     // boxes far outside the point domain never match → null-extended
     val boxRows = (0 until 10).map { k =>
@@ -261,8 +248,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("LEFT SEMI and LEFT ANTI predicate joins rewrite (the EXISTS spelling)") {
-    installed()
-    GeoFunctions.registerAll(spark)
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     val (pts0, ptRows) = ptsDf(180, 91)
     val pts = pts0.unionByName(
@@ -295,7 +280,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("FULL OUTER predicate join rewrites: both sides null-extend") {
-    installed()
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     val (pts0, ptRows) = ptsDf(120, 85)
     val pts = pts0.unionByName(
@@ -330,8 +314,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("ExistenceJoin (IN/EXISTS inside a disjunction) rewrites with a correct flag") {
-    installed()
-    GeoFunctions.registerAll(spark)
     val (pts, ptRows) = ptsDf(160, 87)
     val (boxes, boxRows) = boxDf(6, 88)
     pts.createOrReplaceTempView("asj_ex_pts")
@@ -370,7 +352,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("grid stats are memoized: explain + execute + identical re-build = one stats build") {
-    installed()
     val tmp = java.nio.file.Files.createTempDirectory("asj_memo").toString
     ptsDf(120, 95)._1.write.mode("overwrite").parquet(s"$tmp/a")
     boxDf(10, 96)._1.write.mode("overwrite").parquet(s"$tmp/b")
@@ -397,7 +378,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("guards: conf kill-switch and one-sided/literal conditions stay on Spark's plan") {
-    installed()
     val (pts, _) = ptsDf(50, 51)
     val (boxes, _) = boxDf(5, 52)
     spark.conf.set(AutoSpatialJoin.EnabledConf, "false")

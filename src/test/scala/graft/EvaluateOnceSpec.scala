@@ -106,7 +106,6 @@ class EvaluateOnceSpec extends AnyFunSuite {
 
   private def query(name: String): DataFrame = {
     assume(new java.io.File(sfDir).exists(), s"test data absent at $sfDir")
-    graft.plans.BboxFastPath.install(spark)
     SparkEntry.queries(name)(spark, sfDir)
   }
 

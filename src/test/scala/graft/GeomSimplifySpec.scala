@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.GeoFunctions._
 import graft.functions.expr.GeomKernel
-import graft.plans.GeomSimplify
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,10 +12,7 @@ class GeomSimplifySpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private def installed(): Unit = GeomSimplify.install(spark)
-
   test("st_distance(st_point, st_point) fuses to sqrt arithmetic, bit-exact vs the kernel") {
-    installed()
     val df = Seq((0.0, 0.0, 3.0, 4.0), (1.5, -2.25, -7.125, 0.875),
         (1e-300, 0.0, 2e-300, 0.0), (12.3, 45.6, 12.3, 45.6))
       .toDF("ax", "ay", "bx", "by").repartition(2) // block LocalRelation constant-folding
@@ -34,7 +30,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("st_x/st_y of a constructed point project the coordinate with point-null semantics") {
-    installed()
     val df = Seq((Some(1.5), Some(2.5)), (None, Some(9.0)), (Some(7.0), None))
       .toDF("x", "y").repartition(2)
     val q = df.select(st_x(st_point(col("x"), col("y"))).as("px"),
@@ -49,7 +44,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("st_dwithin on constructed points keeps the sqrt (boundary-exact) and fuses") {
-    installed()
     val df = Seq((0.0, 0.0, 3.0, 4.0)).toDF("ax", "ay", "bx", "by").repartition(2)
     def dw(d: Double) = df.select(st_dwithin(st_point(col("ax"), col("ay")),
       st_point(col("bx"), col("by")), lit(d)).as("w"))
@@ -60,7 +54,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("st_area(st_envelope(st_makebox)) fuses to arithmetic, bit-exact vs the WKB path") {
-    installed()
     // inverted corners, degenerate axes, negative zero, subnormals — every
     // branch of the Envelope-normalize + toGeometry shape dispatch
     val df = Seq(
@@ -114,7 +107,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("fused box area preserves null-coordinate semantics") {
-    installed()
     val df = Seq((Some(1.0), Some(2.0), Some(3.0), Some(4.0)),
       (None, Some(2.0), Some(3.0), Some(4.0)), (Some(1.0), Some(2.0), Some(3.0), None))
       .toDF("x0", "y0", "x1", "y1").repartition(2)
@@ -153,7 +145,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("constructed-box predicates fuse to interval arithmetic with null semantics kept") {
-    installed()
     val df = Seq(
       (0.0, 0.0, 4.0, 4.0, 1.0, 1.0, 3.0, 3.0),   // B inside A
       (0.0, 0.0, 4.0, 4.0, 4.0, 0.0, 8.0, 4.0),   // edge touch
@@ -186,7 +177,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("predicate in a FILTER over constructed boxes fuses (and prunes when projected)") {
-    installed()
     // parquet-backed source: a LocalRelation would let Catalyst push the
     // deterministic filter through the repartition and constant-fold the
     // whole plan away before the rule can be observed
@@ -207,7 +197,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("randomized differential: fused native paths == unfusable UDF paths") {
-    installed()
     import graft.functions.GeoFunctions.{stMakeBoxU, stPointU, stIntersectsU, stContainsU,
       stWithinU, stDisjointU, stAreaU, stEnvelopeU, stDistanceU}
     val rng = new scala.util.Random(20260814)
@@ -262,7 +251,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("st_length of a constructed 2-point segment fuses to hypot, bit-exact") {
-    installed()
     val df = Seq((0.0, 0.0, 3.0, 4.0), (1e-300, 0.0, 2e-300, 0.0),
         (-7.125, 8.5, 2.375, -9.25), (5.0, 5.0, 5.0, 5.0))
       .toDF("ax", "ay", "bx", "by").repartition(2)
@@ -279,7 +267,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("naive expression-join conditions over constructed points fuse to arithmetic") {
-    installed()
     val a = Seq((1L, 0.0, 0.0), (2L, 10.0, 0.0)).toDF("ia", "ax", "ay").repartition(2)
       .withColumn("ga", st_point(col("ax"), col("ay")))
     val b = Seq((10L, 0.0, 3.0), (20L, 50.0, 50.0)).toDF("ib", "bx", "by").repartition(2)
@@ -294,7 +281,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("nondeterministic constructions are never substituted across projections") {
-    installed()
     // st_point(rand()*10, 0) re-evaluated at each fused site would let a
     // filter pass a row whose projected point disagrees with the tested
     // value — the rule must leave the construction alone (and the plan valid)
@@ -311,7 +297,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("bare filter fusion bails when the child project drops the raw coordinates") {
-    installed()
     // a nondeterministic SIBLING column blocks Catalyst's predicate pushdown,
     // so the Filter sits directly over a Project that outputs only (box, r) —
     // the fused condition would reference x0..y1 the child no longer has.
@@ -328,7 +313,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("root-level join fusion preserves the analyzed output schema") {
-    installed()
     // children whose Projects DROP the raw coordinates (select, not
     // withColumn): join-condition fusion must pass the coordinates through
     // AND restore the join's original output, or the ordinal-bound row
@@ -351,7 +335,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("st_point/st_makebox coerce integer inputs to double (no kernel CCE)") {
-    installed()
     // foldable integer args previously hit ClassCastException inside
     // ConstantFolding (the native expressions had no input casts)
     val area = spark.range(1)
@@ -367,7 +350,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("st_total_bounds_agg over constructed points fuses to columnar min/max, bit-exact") {
-    installed()
     import graft.agg.GeoAggregates.st_total_bounds_agg
     import graft.functions.GeoFunctions.stPointU
     val dir = java.nio.file.Files.createTempDirectory("gstb").toString
@@ -428,7 +410,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("WKB columns from storage are never rewritten (rule fires on constructions only)") {
-    installed()
     val df = Seq((0.0, 0.0, 3.0, 4.0)).toDF("ax", "ay", "bx", "by")
       .select(st_point(col("ax"), col("ay")).as("ga"),
         st_point(col("bx"), col("by")).as("gb"))

@@ -96,8 +96,6 @@ class GeomUnionAggSpec extends AnyFunSuite {
   }
 
   test("SQL calls under all three names") {
-    GeoAggregates.registerAll(spark)
-    graft.functions.GeoFunctions.registerAll(spark)
     grid(4).createOrReplaceTempView("union_agg_grid")
     aggs.foreach { case (name, _) =>
       val got = spark.sql(s"SELECT k, st_area($name(geometry)) AS a FROM union_agg_grid GROUP BY k")

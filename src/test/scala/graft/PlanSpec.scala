@@ -20,6 +20,32 @@ class PlanSpec extends AnyFunSuite {
     s"$dir/pts"
   }
 
+  test("every session gets the engine's rules and strategies once, in production order") {
+    import graft.plans.{AutoSpatialJoin, BboxFastPath, ConnectedComponents, Fence, GeomSimplify}
+    val rules = Seq(BboxFastPath, GeomSimplify, AutoSpatialJoin)
+    val strategies = Seq(Fence.PlanFence, ConnectedComponents.PlanConnectedComponents)
+    def assertInstalled(s: org.apache.spark.sql.SparkSession): Unit = {
+      assert(s.experimental.extraOptimizations == rules)
+      assert(s.experimental.extraStrategies == strategies)
+    }
+    // the shared test session has them from its build, whatever ran before
+    assertInstalled(spark)
+    GraftSession.install(spark)
+    assertInstalled(spark)
+
+    // a session the engine did not build gets them when a node needs them
+    val fresh = spark.newSession()
+    assert(fresh.experimental.extraOptimizations.isEmpty && fresh.experimental.extraStrategies.isEmpty)
+    val fenced = graft.plans.Fence(fresh.range(10).withColumn("sq", col("id") * col("id")))
+      .filter(col("sq") > 50).select("id")
+    assert(fenced.as[Long].collect().sorted.toSeq == Seq(8L, 9L))
+    val pairs = fresh.createDataFrame(Seq((1L, 2L), (2L, 3L), (5L, 6L))).toDF("a", "b")
+    val cc = graft.ops.Dedup.connectedComponents(pairs, "a", "b")
+    assert(cc.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
+    assertInstalled(fresh)
+  }
+
   test("column pruning: selecting x only reads x") {
     val path = writeSample()
     val plan = spark.read.parquet(path).select("x")
@@ -49,7 +75,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("BboxFastPath rule: .cx over GeoParquet covering column reaches PushedFilters") {
     import graft.api.GeoDataFrame
-    graft.plans.BboxFastPath.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("bboxrule").toString
     val src = GeoDataFrame((0 until 2000).map(i => (i.toLong, (i % 100).toDouble, (i / 100).toDouble))
       .toDF("id", "x", "y").withColumn("geometry", st_point(col("x"), col("y"))).drop("x", "y"))
@@ -84,7 +109,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("BboxFastPath: null bbox with non-null geometry is never dropped") {
-    graft.plans.BboxFastPath.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("bboxnull").toString
     // externally-written layout: spec-shaped covering column, but one row's
     // bbox entry is legally null while its geometry is not

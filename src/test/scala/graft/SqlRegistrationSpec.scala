@@ -1,17 +1,13 @@
 package graft
 
-import graft.functions.{GeoFunctions, TextFunctions}
-import graft.agg.GeoAggregates
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SQL surface: every registered function callable from spark.sql. */
+/** The SQL surface: every function that `GraftSession.install` registers
+  * is callable from spark.sql on the engine's session. */
 class SqlRegistrationSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
   test("st_* functions and aggregates work through SQL") {
-    GeoFunctions.registerAll(spark)
-    GeoAggregates.registerAll(spark)
-    TextFunctions.registerAll(spark)
     val row = spark.sql(
       """SELECT st_astext(st_point(1.0D, 2.0D)) AS wkt,
         |       st_area(st_makebox(0.0D, 0.0D, 2.0D, 3.0D)) AS a,
@@ -32,8 +28,6 @@ class SqlRegistrationSpec extends AnyFunSuite {
   }
 
   test("SQL strings get the native expressions and GeomSimplify fusions") {
-    GeoFunctions.registerAll(spark)
-    graft.plans.GeomSimplify.install(spark)
     spark.range(5).createOrReplaceTempView("sqlfuse")
     // integer arguments on purpose: the native builders must cast (a UDF
     // would have coerced silently; the raw expression would ClassCastException)
@@ -63,8 +57,6 @@ class SqlRegistrationSpec extends AnyFunSuite {
   }
 
   test("round-3 SQL surface: coverage agg, M/identical/precision, grid overlays, EWKB") {
-    GeoFunctions.registerAll(spark)
-    GeoAggregates.registerAll(spark)
     spark.range(4).createOrReplaceTempView("t3")
     val cov = spark.sql(
       """SELECT st_area(st_coverage_union_agg(st_makebox(CAST(id AS DOUBLE), 0.0D, CAST(id + 1 AS DOUBLE), 1.0D))) AS ca
@@ -85,7 +77,6 @@ class SqlRegistrationSpec extends AnyFunSuite {
   }
 
   test("st_simplify_coverage keeps null slots positional (empty substitute, no drop)") {
-    GeoFunctions.registerAll(spark)
     import graft.geom.Wkb
     import spark.implicits._
     // two polygons sharing a jagged edge, with a NULL in the middle slot:
