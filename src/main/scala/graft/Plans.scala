@@ -38,7 +38,7 @@ object Plans {
     }
 
     section("Broadcast sjoin (points-in-polygons)",
-      "Stream side explodes matched build ids via one UDF; row assembly is a plain integer-key BroadcastHashJoin — the big side never shuffles.") {
+      "One Generate: `broadcast_probe` looks each stream row up in the broadcast STRtree and emits the matching build rows itself (its string names the predicate and the build row count) — no join follows and the big side never shuffles.") {
       SpatialJoin.sjoin(pts, cells, "intersects", "inner")
     }
 

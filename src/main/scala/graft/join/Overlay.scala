@@ -104,16 +104,15 @@ object Overlay {
 
   /** The left frame plus `__graft_sub`, the union of the right geometries
     * each row intersects (null for none), as one projection: the row's
-    * geometry probes the broadcast STRtree of the right geometries with
+    * geometry probes the [[BroadcastIndex]] of the right geometries with
     * the broadcast sjoin's prepared `intersects`. The left frame runs once,
     * with no id stamp, union shuffle or re-join. */
   private def broadcastSubtrahends(a: DataFrame, b: DataFrame, geom1: String, geom2: String): DataFrame = {
-    val bc = new SpatialJoin.BroadcastBuild(b, geom2, reread = false).index
-    val bcId = bc.id
+    val index = BroadcastIndex(b, geom2)
     val subtrahendU = udf((g: Array[Byte]) =>
       if (g == null) null
       else {
-        val idx = BroadcastTreeCache.get(bcId, bc.value)
+        val idx = index.value
         val hits = idx.matching("intersects", Wkb.read(g), buildIsRight = true, 0.0)
         if (hits.isEmpty) null else Wkb.write(GeomOps.unionAll(hits.toSeq.map(idx.geom(_))))
       })

@@ -21,10 +21,10 @@ import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
   * when the upstream is not evaluation-stable; the common scan→filter→
   * project shape skips the materialization entirely.
   *
-  * The broadcast paths (sjoin, sjoin_nearest, overlay difference) pin
-  * nothing: a build side that only reads stored rows is stamped and read
-  * again, any other is collected once and keyed by position
-  * (`SpatialJoin.BroadcastBuild`). Pinned stamps remain on the grid
+  * The broadcast paths (sjoin, sjoin_nearest, overlay difference) stamp
+  * and pin nothing: the build side is collected once into a
+  * `BroadcastIndex` and the probe emits its rows, so no id is read twice.
+  * Pinned stamps remain on the grid
   * join's outer sides, the outer sjoin with `onAttribute`, the grid
   * overlay difference, the unbounded nearest and the AutoSpatialJoin
   * outer rewrites.

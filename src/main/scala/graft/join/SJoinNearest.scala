@@ -4,7 +4,6 @@ import graft.geom.Wkb
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.locationtech.jts.geom.Envelope
 
 /** Nearest-neighbour join — reference `sjoin_nearest`
   * (`geopandas/tools/sjoin.py:589-741`, tree knn `sindex.py:373-479`).
@@ -12,7 +11,9 @@ import org.locationtech.jts.geom.Envelope
   * `distance_col`.
   *
   * Broadcast strategy: expanding-ring STRtree search per stream row against
-  * the broadcast build side, collecting equidistant ties. Distributed
+  * the broadcast build side, collecting equidistant ties
+  * (`BroadcastIndex.nearest`). Every strategy puts the distance column
+  * last, as GeoPandas appends `distance_col`. Distributed
   * strategy (requires `max_distance`): a dwithin grid join + window
   * `rank() == 1` over distance, which keeps ties exactly like the reference.
   */
@@ -49,10 +50,7 @@ object SJoinNearest {
       else (right, rightGeom)
     val (l2, r2) = SpatialJoin.applySuffixes(left, rightRenamed, leftGeom, rGeomName, lsuffix, rsuffix)
 
-    val rightCount =
-      if (broadcastThreshold < 0) Long.MaxValue
-      else right.limit((broadcastThreshold + 1).min(Int.MaxValue - 1L).toInt).count()
-    if (rightCount <= broadcastThreshold)
+    if (SpatialJoin.countUpTo(right, broadcastThreshold) <= broadcastThreshold)
       broadcastNearest(l2, r2, how, leftGeom, rGeomName, maxDistance, distanceCol, exclusive)
     else maxDistance match {
       case Some(md) => gridNearest(l2, r2, how, leftGeom, rGeomName, md, distanceCol, exclusive)
@@ -72,16 +70,10 @@ object SJoinNearest {
                               leftGeom: String, rGeomName: String,
                               distanceCol: Option[String], exclusive: Boolean): DataFrame = {
     import graft.functions.GeoFunctions.st_bounds
-    val nnDebug = sys.env.contains("SPARK_GRAFT_NN_DEBUG")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      if (nnDebug) println(f"[nn] $label%-34s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
     // ONE sampled stats pass per side: seeds the radius schedule AND every
     // round's grid (specFrom is arithmetic), so later rounds run no stats
     // jobs at all — at 100 TB each avoided pass is a full scan-sample job
-    val rsStats = timed("right stats")(SpatialJoin.sideStats(r2, col(rGeomName)))
+    val rsStats = SpatialJoin.sideStats(r2, col(rGeomName))
     if (rsStats.n == 0) { // right side has no geometries
       val empty = l2.limit(if (how == "left") Int.MaxValue else 0)
       return distanceCol.map(c => empty.withColumn(c, lit(null).cast("double"))).getOrElse(empty)
@@ -101,11 +93,9 @@ object SJoinNearest {
     // tracked loop), extent (drives the guaranteed-coverage diagonal) and
     // average bbox edges (drive the per-round grids) — previously three
     // separate jobs (count + sampled stats + a full extent scan)
-    val lsRow = timed("left stats (one pass)") {
-      remaining.select(st_bounds(col(leftGeom)).as("b"))
-        .agg(min("b.xmin"), min("b.ymin"), max("b.xmax"), max("b.ymax"), count(lit(1)),
-          avg(col("b.xmax") - col("b.xmin")), avg(col("b.ymax") - col("b.ymin"))).head()
-    }
+    val lsRow = remaining.select(st_bounds(col(leftGeom)).as("b"))
+      .agg(min("b.xmin"), min("b.ymin"), max("b.xmax"), max("b.ymax"), count(lit(1)),
+        avg(col("b.xmax") - col("b.xmin")), avg(col("b.ymax") - col("b.ymin"))).head()
     val nLeft = lsRow.getLong(4)
     val lsStats =
       if (nLeft == 0) SpatialJoin.SideStats(0, 0, 0, 0, 0L, 0, 0)
@@ -162,7 +152,7 @@ object SJoinNearest {
     // x4 growth resumes, and the final permitted round is always the
     // diagonal, so a misestimate costs one extra cheap round, never
     // correctness.
-    val schedule: IndexedSeq[Double] = timed("schedule build") {
+    val schedule: IndexedSeq[Double] = {
       val rightFrac = math.min(1.0, 4096.0 / math.max(1L, n))
       val rs = r2.select(col(rGeomName)).na.drop(Seq(rGeomName))
         .sample(withReplacement = false, rightFrac, 42L).limit(8192)
@@ -217,7 +207,6 @@ object SJoinNearest {
         b.result()
       }
     }
-    if (nnDebug) println(s"[nn] schedule=${schedule.mkString(", ")}")
 
     var radius = schedule.head
     var acc: Option[DataFrame] = None
@@ -239,7 +228,7 @@ object SJoinNearest {
         Some(distanceCol.getOrElse("__graft_dist")), exclusive, Some(spec)).cache()
       toUnpersist += matched
       val matchedIds = matched.select(col("__graft_auto_lid")).distinct()
-      val matchedN = timed(f"round $rounds r=$effRadius%.2f matched")(matchedIds.count())
+      val matchedN = matchedIds.count()
       acc = Some(acc.map(_.unionByName(matched, allowMissingColumns = true)).getOrElse(matched))
       rounds += 1
       if (matchedN >= remainingCount) remainingCount = 0
@@ -253,11 +242,9 @@ object SJoinNearest {
         // losing one to preemption/decommission after round k would fail the
         // job unrecoverably; HDFS-backed checkpoint survives executor loss.
         val anti = remaining.join(matchedIds, Seq("__graft_auto_lid"), "left_anti")
-        timed(f"round ${rounds - 1} checkpoint") {
-          remaining =
-            if (anti.sparkSession.sparkContext.getCheckpointDir.isDefined) anti.checkpoint()
-            else anti.localCheckpoint()
-        }
+        remaining =
+          if (anti.sparkSession.sparkContext.getCheckpointDir.isDefined) anti.checkpoint()
+          else anti.localCheckpoint()
         checkpoints += remaining
       }
     }
@@ -295,70 +282,10 @@ object SJoinNearest {
                                leftGeom: String, rGeomName: String,
                                maxDistance: Option[Double], distanceCol: Option[String],
                                exclusive: Boolean): DataFrame = {
-    val side = new SpatialJoin.BroadcastBuild(r2, rGeomName)
-    val bc = side.index
-    val bcId = bc.id
-    val maxD = maxDistance.getOrElse(Double.PositiveInfinity)
-    val excl = exclusive
-
-    // array of (bid, distance) for all ties at min distance
-    val nearestU = udf((g: Array[Byte]) => {
-      if (g == null) Array.empty[(Long, Double)]
-      else {
-        val idx = BroadcastTreeCache.get(bcId, bc.value)
-        if (idx.ids.isEmpty) Array.empty[(Long, Double)]
-        else {
-          val geom = Wkb.read(g)
-          val rootEnv = idx.tree.getRoot.getBounds.asInstanceOf[Envelope]
-          val span = math.max(rootEnv.getWidth, rootEnv.getHeight)
-          // start at the distance to the build extent (first ring is then
-          // guaranteed to reach it, even for far-away or degenerate-extent
-          // builds) padded by the expected nearest-neighbour spacing
-          val toRoot = geom.getEnvelopeInternal.distance(rootEnv)
-          var radius = math.max(1e-9, math.min(maxD, toRoot + math.max(1e-9, span / 64)))
-          var best = Double.PositiveInfinity
-          var done = false
-          val cands = new scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-          while (!done) {
-            val env = new Envelope(geom.getEnvelopeInternal)
-            env.expandBy(radius)
-            val hits = idx.tree.query(env)
-            cands.clear()
-            var i = 0
-            while (i < hits.size()) {
-              val pos = hits.get(i).asInstanceOf[Integer].intValue()
-              val d = geom.distance(idx.geom(pos))
-              if (d <= maxD && !(excl && d == 0.0 && geom.equalsTopo(idx.geom(pos)))) {
-                if (d < best) best = d
-                cands += ((idx.ids(pos), d))
-              }
-              i += 1
-            }
-            // stop once the best hit is inside the searched ring (no closer
-            // geometry can exist outside it), the cap is reached, or the ring
-            // already covers the entire build extent (nothing more to find —
-            // the unbounded search must never terminate before this)
-            val coversAll = env.contains(rootEnv)
-            if (best <= radius || radius >= maxD || coversAll) done = true
-            else radius = radius * 4
-          }
-          if (best.isInfinity) Array.empty[(Long, Double)]
-          else cands.filter(_._2 == best).toArray
-        }
-      }
-    })
-
-    // explode(probe) runs the probe once per row (see SpatialJoin.broadcastJoin)
-    val probe = nearestU(col(leftGeom))
-    val joinType = if (how == "left") "left" else "inner"
-    val dcol = distanceCol.getOrElse("__graft_dist")
-    val withDist = l2
-      .select(col("*"), (if (how == "left") explode_outer(probe) else explode(probe)).as("__graft_hit"))
-      .withColumn(SpatialJoin.BuildId, col("__graft_hit._1"))
-      .withColumn(dcol, col("__graft_hit._2"))
-      .drop("__graft_hit")
-    val res = withDist.join(broadcast(side.keyed), Seq(SpatialJoin.BuildId), joinType)
-      .drop(SpatialJoin.BuildId).drop(rGeomName)
+    val nearest = BroadcastProbe.Nearest(maxDistance.getOrElse(Double.PositiveInfinity), exclusive,
+      distanceCol.getOrElse("__graft_dist"))
+    val res = BroadcastProbe.join(l2, leftGeom, BroadcastIndex(r2, rGeomName), nearest, outer = how == "left")
+      .drop(rGeomName)
     if (distanceCol.isEmpty) res.drop("__graft_dist") else res
   }
 

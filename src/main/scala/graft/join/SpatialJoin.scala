@@ -2,15 +2,10 @@ package graft.join
 
 import graft.geom.Wkb
 import graft.plans.Fence
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.types.LongType
-import org.locationtech.jts.geom.{Envelope, Geometry}
+import org.locationtech.jts.geom.Geometry
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
-import org.locationtech.jts.index.strtree.STRtree
 
 /** Distributed spatial predicate join — the engine's version of the
   * reference's `sjoin` (`geopandas/tools/sjoin.py:12-515`).
@@ -19,14 +14,13 @@ import org.locationtech.jts.index.strtree.STRtree
   * reference's single hard-coded strategy of "STRtree on one side",
   * `sjoin.py:212-268`, but distributed):
   *
-  *  1. '''Broadcast''': the small side's geometries are collected and
-  *     broadcast, and an STRtree + prepared geometries are built once per
-  *     executor JVM. The stream side explodes the ids of matching build
-  *     rows via a UDF, then a plain Catalyst broadcast hash join on the id
-  *     attaches the build rows — keeping the row-assembly inside
-  *     whole-stage codegen and never shuffling the big side. A computed
-  *     build side runs once: its collected rows are the re-joined rows
-  *     (see [[SpatialJoin.BroadcastBuild]]).
+  *  1. '''Broadcast''': the small side is collected once and broadcast as
+  *     a [[BroadcastIndex]], whose STRtree and prepared geometries are
+  *     built once per executor JVM. Each stream row's geometry probes it
+  *     through one generator ([[BroadcastProbe]]) that emits the matching
+  *     build rows themselves: Spark's own `Generate` assembles the output
+  *     rows and, for `how=left`/`right`, null-extends a stream row with no
+  *     match. The big side is never shuffled and no join follows.
   *  2. '''Grid (PBSM)''': both sides are assigned grid cells covered by
   *     their (distance-expanded) bboxes, exploded, hash-joined on cell id
   *     with bbox-overlap pre-conditions, refined by the exact predicate,
@@ -211,91 +205,13 @@ object SpatialJoin {
   // Broadcast strategy
   // -------------------------------------------------------------------------
 
-  /** The column that keys a broadcast build side's rows. */
-  private[graft] val BuildId = "__graft_bid"
-
-  /** The build side of a broadcast join: the build geometries keyed by
-    * [[BuildId]], the STRtree's source (`index`), and the build rows the
-    * probe's matches re-join on [[BuildId]] (`keyed`).
-    *
-    * A build that only reads stored rows (a plan [[Pins]] finds stable,
-    * whose projections compute no column) is stamped with
-    * `monotonically_increasing_id`: its geometries are collected for the
-    * index and the BroadcastExchange reads it again from its source. Any
-    * other build runs once, in one `collect()`: the collected rows feed
-    * the index and, keyed by position, are the re-join side, so a computed
-    * build (a clip output) is neither computed again nor pinned. Those
-    * rows are re-joined from slices of about [[SliceBytes]] each, so no
-    * task carries a large share of them. `reread = false` always collects
-    * (a streaming join may not stamp ids; an overlay difference re-joins
-    * nothing). */
-  private[graft] final class BroadcastBuild(build: DataFrame, geom: String, reread: Boolean = true) {
-    private val sc = build.sparkSession.sparkContext
-    private val (geoms, rows, stamped) =
-      if (reread && storedRows(build)) {
-        val stamped = build.withColumn(BuildId, monotonically_increasing_id())
-        val geoms = stamped.select(col(BuildId), col(geom)).na.drop(Seq(geom)).collect()
-          .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
-        (geoms, Array.empty[Row], Some(stamped))
-      } else {
-        val rows = build.collect()
-        val g = build.schema.fieldIndex(geom)
-        val geoms = rows.indices.collect {
-          case i if !rows(i).isNullAt(g) => (i.toLong, rows(i).getAs[Array[Byte]](g))
-        }.toArray
-        (geoms, rows, None)
-      }
-    val index: Broadcast[Array[(Long, Array[Byte])]] = sc.broadcast(geoms)
-    lazy val keyed: DataFrame = stamped.getOrElse {
-      val bytes = rows.length.toLong * build.schema.defaultSize + geoms.iterator.map(_._2.length.toLong).sum
-      build.sparkSession.createDataFrame(
-        sc.parallelize(rows.indices.map(i => Row.fromSeq(rows(i).toSeq :+ i.toLong)), (bytes / SliceBytes + 1).toInt),
-        build.schema.add(BuildId, LongType, nullable = false))
-    }
-  }
-
-  /** Spark's large-task warning size (1000 KiB, `TaskSetManager`). */
-  private val SliceBytes = 1000L * 1024
-
-  /** Whether running `df` again only reads stored rows: a stable plan in
-    * the sense of [[Pins]] whose projections select or rename columns. */
-  private def storedRows(df: DataFrame): Boolean =
-    !Pins.needsPin(df) && !df.queryExecution.analyzed.exists {
-      case p: Project => !p.projectList.forall {
-        case _: Attribute | Alias(_: Attribute, _) => true
-        case _                                     => false
-      }
-      case _ => false
-    }
-
   private def broadcastJoin(l2: DataFrame, r2: DataFrame, predicate: String, how: String,
                             leftGeom: String, rightGeom: String, distance: Double,
                             buildRight: Boolean): DataFrame = {
     val (stream, streamGeom, build, buildGeom) =
       if (buildRight) (l2, leftGeom, r2, rightGeom) else (r2, rightGeom, l2, leftGeom)
-    val side = new BroadcastBuild(build, buildGeom)
-    val bc = side.index
-    val bcId = bc.id
-    val pred = predicate
-    val dist = distance
-    val bIsRight = buildRight
-
-    // the probe is the generator's own input, so it runs once per stream
-    // row: as a projected column it was copied into the `size(...) > 0`
-    // filter InferFiltersFromGenerate derives for an attribute input
-    val matchU = udf((g: Array[Byte]) =>
-      if (g == null) Array.empty[Long]
-      else {
-        val idx = BroadcastTreeCache.get(bcId, bc.value)
-        idx.matching(pred, Wkb.read(g), bIsRight, dist).map(idx.ids(_))
-      })
-
-    // explode_outer emits one null-id row for an empty match array
-    val outer = how != "inner"
-    val probe = matchU(col(streamGeom))
-    stream.select(col("*"), (if (outer) explode_outer(probe) else explode(probe)).as(BuildId))
-      .join(broadcast(side.keyed), Seq(BuildId), if (outer) "left" else "inner")
-      .drop(BuildId)
+    BroadcastProbe.join(stream, streamGeom, BroadcastIndex(build, buildGeom),
+      BroadcastProbe.Predicate(predicate, buildRight, distance), outer = how != "inner")
   }
 
   // -------------------------------------------------------------------------
@@ -446,7 +362,7 @@ object SpatialJoin {
     // refine goes through the per-thread cache: join output within a cell
     // repeats the same geometries across many pairs, so WKB parses and
     // prepared geometries are reused instead of rebuilt per pair (the grid
-    // analog of the broadcast path's BroadcastTreeCache; also removes
+    // analog of the BroadcastIndex's prepared geometries; also removes
     // contains_properly's per-pair prepare)
     val refineU = udf((a: Array[Byte], b: Array[Byte]) =>
       if (a == null || b == null) false
@@ -551,71 +467,4 @@ private[graft] object RefineCache {
       case _                   => SpatialJoin.evalPredicate(pred, ea.geom, eb.geom, distance)
     }
   }
-}
-
-/** Per-JVM (per-executor) cache of broadcast STRtrees: the tree is built once
-  * from the broadcast WKB array per executor, mirroring the reference's lazy
-  * cached `sindex` (`geopandas/array.py:374-379`) at cluster scope. */
-object BroadcastTreeCache {
-  final class IndexData(rows: Array[(Long, Array[Byte])]) {
-    val ids: Array[Long] = rows.map(_._1)
-    val geom: Array[Geometry] = rows.map(r => Wkb.read(r._2))
-    private val prep = new java.util.concurrent.ConcurrentHashMap[Int, PreparedGeometry]()
-    val tree: STRtree = {
-      val t = new STRtree()
-      var i = 0
-      while (i < geom.length) {
-        if (geom(i) != null && !geom(i).isEmpty) t.insert(geom(i).getEnvelopeInternal, Integer.valueOf(i))
-        i += 1
-      }
-      t.build()
-      t
-    }
-    def prepared(i: Int): PreparedGeometry =
-      prep.computeIfAbsent(i, (k: Int) => PreparedGeometryFactory.prepare(geom(k)))
-
-    /** Positions of the indexed geometries for which `pred` holds against
-      * `g`, with the indexed (build) geometry prepared; `buildIsRight` as
-      * in [[SpatialJoin.evalWithPrepared]]. */
-    def matching(pred: String, g: Geometry, buildIsRight: Boolean, distance: Double): Array[Int] = {
-      val env = new Envelope(g.getEnvelopeInternal)
-      if (pred == "dwithin") env.expandBy(distance)
-      val cands = tree.query(env)
-      val out = Array.newBuilder[Int]
-      var i = 0
-      while (i < cands.size()) {
-        val pos = cands.get(i).asInstanceOf[Integer].intValue()
-        if (SpatialJoin.evalWithPrepared(pred, prepared(pos), geom(pos), g, buildIsRight, distance)) out += pos
-        i += 1
-      }
-      out.result()
-    }
-  }
-
-  /** Bound on retained trees per JVM. Broadcast ids are monotonically
-    * increasing, so FIFO eviction == least-recently-created — a long session
-    * issuing thousands of broadcast sjoins no longer leaks STRtrees and
-    * prepared geometries. Reads stay on the lock-free CHM fast path (the
-    * cache is probed once per stream ROW, so a synchronized LRU map would
-    * contend across all task threads). */
-  private val MaxEntries = 64
-  private val cache = new java.util.concurrent.ConcurrentHashMap[Long, IndexData]()
-  private val order = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-
-  def get(bcId: Long, rows: => Array[(Long, Array[Byte])]): IndexData = {
-    val existing = cache.get(bcId)
-    if (existing != null) return existing
-    val built = cache.computeIfAbsent(bcId, (k: Long) => { order.add(k); new IndexData(rows) })
-    var guard = 0
-    while (cache.size() > MaxEntries && guard < 1024) {
-      val old = order.poll()
-      if (old == null) return built
-      if (old.longValue() == bcId) order.add(old) // never evict the entry just built
-      else cache.remove(old)
-      guard += 1
-    }
-    built
-  }
-
-  private[graft] def size: Int = cache.size()
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.api.GeoDataFrame
-import graft.geom.Wkb
-import graft.join.{BroadcastTreeCache, SpatialJoin}
+import graft.join.{BroadcastIndex, BroadcastProbe, SpatialJoin}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,9 +12,10 @@ import org.apache.spark.sql.functions._
   *
   *  - streaming sjoin: an unbounded stream of geometries joined against a
   *    STATIC layer (points-in-polygons enrichment). The static side is
-  *    collected + broadcast once and probed per micro-batch via the same
-  *    executor-cached STRtree the batch broadcast join uses — no shuffle of
-  *    the stream, works in append mode.
+  *    collected + broadcast once as the same [[graft.join.BroadcastIndex]]
+  *    the batch broadcast join uses, and each stream row's probe emits its
+  *    matching static rows: a projection of the stream, with no
+  *    stream-static join and no shuffle; works in append mode.
   *  - windowed spatial aggregation: watermark + window + any graft
   *    aggregate (st_union_agg, total bounds, counts per cell).
   */
@@ -29,38 +29,18 @@ object StreamingGeo {
                          streamGeom: String = "geometry",
                          keepUnmatched: Boolean = false,
                          broadcastThreshold: Long = 2000000L): DataFrame = {
-    val staticGeom = static.geometryCol
     // same guard as SpatialJoin: the static layer is collected + broadcast,
-    // so an over-threshold layer must fail loudly, not OOM the driver.
-    // limit(cap+1).count() short-circuits — no full count of a huge layer.
-    if (broadcastThreshold >= 0) {
-      val upTo = static.df.limit((broadcastThreshold + 1).min(Int.MaxValue - 1L).toInt).count()
-      require(upTo <= broadcastThreshold,
-        s"sjoinAgainstStatic broadcasts the static layer, which exceeds " +
-        s"$broadcastThreshold rows; repartition-and-join the stream against " +
-        s"it in batch, or raise broadcastThreshold if the driver can hold it")
-    }
-    // the static layer runs once: its collected rows feed the STRtree and,
-    // keyed by position, the batch side of the stream-static join (an id
-    // stamp is rejected by the streaming unsupported-operations checker)
-    val side = new SpatialJoin.BroadcastBuild(static.df, staticGeom, reread = false)
-    val bc = side.index
-    val bcId = bc.id
-    val pred = predicate
-
-    val matchU = udf((g: Array[Byte]) =>
-      if (g == null) Array.empty[Long]
-      else {
-        val idx = BroadcastTreeCache.get(bcId, bc.value)
-        idx.matching(pred, Wkb.read(g), buildIsRight = true, 0.0).map(idx.ids(_))
-      })
-
-    // explode(probe) runs the probe once per row (see SpatialJoin.broadcastJoin)
-    val probe = matchU(col(streamGeom))
-    stream.select(col("*"), (if (keepUnmatched) explode_outer(probe) else explode(probe)).as(SpatialJoin.BuildId))
-      .join(broadcast(side.keyed.drop(staticGeom)), Seq(SpatialJoin.BuildId),
-        if (keepUnmatched) "left" else "inner")
-      .drop(SpatialJoin.BuildId)
+    // so an over-threshold layer must fail loudly, not OOM the driver
+    require(broadcastThreshold < 0 || SpatialJoin.countUpTo(static.df, broadcastThreshold) <= broadcastThreshold,
+      s"sjoinAgainstStatic broadcasts the static layer, which exceeds " +
+      s"$broadcastThreshold rows; repartition-and-join the stream against " +
+      s"it in batch, or raise broadcastThreshold if the driver can hold it")
+    // the static geometry is emitted under a private name and dropped, so a
+    // stream geometry of the same name stays unambiguous
+    val staticGeom = "__graft_static_geom"
+    val index = BroadcastIndex(static.df.withColumnRenamed(static.geometryCol, staticGeom), staticGeom)
+    BroadcastProbe.join(stream, streamGeom, index, BroadcastProbe.Predicate(predicate, buildIsRight = true, 0.0),
+      keepUnmatched).drop(staticGeom)
   }
 
   /** Per-window, per-grid-cell aggregation of a streaming point set:

@@ -2,14 +2,13 @@ package graft
 
 import graft.functions.GeoFunctions._
 import graft.geom.{GeomOps, Wkb}
-import graft.join.{Clip, Pins, SJoinNearest, SpatialJoin}
+import graft.join.{BroadcastProbe, Clip, Pins, SJoinNearest, SpatialJoin}
 import graft.ops.Dedup
 import graft.plans.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId, Expression, ScalaUDF, StringSplit}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan, Project, RepartitionOperation, Sort}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Finds ScalaUDF calls that an optimized plan evaluates twice for one row. */
@@ -152,12 +151,9 @@ class EvaluateOnceSpec extends AnyFunSuite {
     assert(UdfOnce.count(q93, st_interpolate(one, lit(0.0), lit(false))) == 1, q93)
   }
 
-  /** Tree-probe UDFs: the ones returning an array of `elem`. */
-  private def probes(plan: LogicalPlan, elem: PartialFunction[DataType, Boolean]): Int =
-    UdfOnce.occurrences(plan, { case u: ScalaUDF => u.dataType match {
-      case ArrayType(t, _) => elem.applyOrElse(t, (_: DataType) => false)
-      case _ => false
-    } })
+  /** Broadcast index probes whose search is a `kind`. */
+  private def probes(plan: LogicalPlan, kind: Class[_]): Int =
+    UdfOnce.occurrences(plan, { case p: BroadcastProbe => kind.isInstance(p.search) })
 
   test("inner and left broadcast sjoin probe the tree once per row") {
     val pts = points((1, 1), (3, 3), (50, 50))
@@ -165,7 +161,7 @@ class EvaluateOnceSpec extends AnyFunSuite {
     for ((how, want) <- Seq("inner" -> 3L, "left" -> 4L)) {
       val j = SpatialJoin.sjoin(pts, polys, "intersects", how)
       val plan = assertOnce(j)
-      assert(probes(plan, { case LongType => true }) == 1, s"$how:\n$plan")
+      assert(probes(plan, classOf[BroadcastProbe.Predicate]) == 1, s"$how:\n$plan")
       assert(j.count() == want, how)
     }
   }
@@ -176,7 +172,7 @@ class EvaluateOnceSpec extends AnyFunSuite {
     for (how <- Seq("inner", "left")) {
       val j = SJoinNearest.sjoinNearest(pts, targets, how, distanceCol = Some("d"))
       val plan = assertOnce(j)
-      assert(probes(plan, { case _: StructType => true }) == 1, s"$how:\n$plan")
+      assert(probes(plan, classOf[BroadcastProbe.Nearest]) == 1, s"$how:\n$plan")
       assert(j.select("pid", "tid").as[(Int, Int)].collect().sorted.toSeq == Seq((0, 0), (1, 0), (1, 1), (2, 1)), how)
     }
   }

@@ -83,12 +83,52 @@ class EvaluationCountSpec extends AnyFunSuite {
     assert(n == polys.size + 1L, s"$n calls for ${polys.size} rows")
   }
 
-  test("a stored build side is read again from its source, not collected whole") {
+  test("a left broadcast sjoin over a stored build side keeps every probe row") {
     val src = boxes("id", polys: _*).select("id", "geometry")
-    val keyed = new SpatialJoin.BroadcastBuild(src, "geometry").keyed.queryExecution.analyzed
-    assert(keyed.collectLeaves().map(_.getClass.getSimpleName) == Seq("LogicalRelation"), keyed)
     val joined = SpatialJoin.sjoin(probes, src, how = "left")
     assert(joined.select("pid", "id").as[(Int, Option[Int])].collect().sorted.toSeq ==
       Seq((0, Some(0)), (1, Some(0)), (1, Some(1)), (2, Some(2)), (3, None), (4, Some(1))))
+  }
+
+  /** Jobs started while `action` runs, counted by a listener on the
+    * action's job group. Listener events arrive asynchronously and in
+    * order, so the count is read once a marker job's start has arrived. */
+  private def jobsOf(action: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group`                    => jobs.incrementAndGet()
+          case g if g == s"$group-marker" => flushed.countDown()
+          case _                          =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup(g: String)(body: => Unit): Unit = {
+        sc.setJobGroup(g, g)
+        try body finally sc.clearJobGroup()
+      }
+      inGroup(group)(action)
+      inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
+      assert(flushed.await(10, java.util.concurrent.TimeUnit.SECONDS), "the marker job's start never arrived")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a built broadcast sjoin runs one job when it executes, over a stored or a computed build side") {
+    val stored = boxes("id", polys: _*).select("id", "geometry")
+    val computed = Clip.clip(boxes("id", polys: _*), mask).select("id", "geometry")
+    for ((name, build) <- Seq("stored" -> stored, "computed" -> computed); how <- Seq("inner", "left")) {
+      val joined = SpatialJoin.sjoin(probes, build, how = how).select("pid", "id")
+      var rows = Seq.empty[(Int, Option[Int])]
+      val n = jobsOf { rows = joined.as[(Int, Option[Int])].collect().toSeq }
+      assert(n == 1, s"$name $how build: $n jobs")
+      assert(rows.flatMap { case (p, id) => id.map(p -> _) }.sorted == Seq((0, 0), (1, 0), (1, 1), (2, 2), (4, 1)),
+        s"$name $how build")
+    }
   }
 }

@@ -125,14 +125,20 @@ class PlanSpec extends AnyFunSuite {
     assert(got == Seq(1L, 2L), s"null-bbox row dropped: got $got")
   }
 
-  test("sjoin broadcast path produces BroadcastHashJoin on the id key") {
+  test("sjoin broadcast path plans one Generate of the index probe and no join") {
     val pts = (0 until 100).map(i => (i, Wkb.write(GeomOps.point(i % 10, i / 10))))
       .toDF("pid", "geometry")
     val polys = Seq((0, Wkb.write(GeomOps.makeBox(0, 0, 20, 20)))).toDF("poly_id", "geometry")
-    val j = graft.join.SpatialJoin.sjoin(pts, polys, "intersects", "inner")
-    val plan = j.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
+    for (how <- Seq("inner", "left")) {
+      val j = graft.join.SpatialJoin.sjoin(pts, polys, "intersects", how)
+      val plan = j.queryExecution.executedPlan
+      val generators = plan.collect { case g: org.apache.spark.sql.execution.GenerateExec => g.generator }
+      assert(generators.map(_.getClass) == Seq(classOf[graft.join.BroadcastProbe]), s"$how:\n$plan")
+      assert(plan.collect { case b: org.apache.spark.sql.execution.joins.BaseJoinExec => b }.isEmpty, s"$how:\n$plan")
+      assert(!plan.toString.contains("CartesianProduct"), s"$how:\n$plan")
+      assert(plan.toString.contains("broadcast_probe(intersects, 1 build rows"), s"$how:\n$plan")
+      assert(j.count() == 100, how)
+    }
   }
 
   test("grid sjoin plans a hash join on the cell key, not a cartesian product") {

@@ -178,11 +178,14 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(run(-1L) == Seq((-1, 200), (-1, 300), (0, 100)))
   }
 
-  test("broadcast tree cache stays bounded after many sjoins") {
+  test("repeated broadcast sjoins leave no persistent RDD") {
     val polys = squares("poly_id", (0, 0, 2, 2))
     val pts = points((1, 1))
-    for (_ <- 1 to 3) SpatialJoin.sjoin(pts, polys, "intersects", "inner").count()
-    assert(graft.join.BroadcastTreeCache.size <= 64)
+    val sc = spark.sparkContext
+    val marker = sc.emptyRDD[Int].id
+    for (how <- Seq("inner", "left", "inner", "left"))
+      assert(SpatialJoin.sjoin(pts, polys, "intersects", how).count() == 1, how)
+    assert(sc.getPersistentRDDs.keys.forall(_ < marker), sc.getPersistentRDDs)
   }
 
   test("sjoin_nearest how=right: nearest left for each right row, right geometry kept") {
@@ -462,5 +465,29 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(err.getMessage.contains("mask exceeds"))
     // at/under the cap still works
     assert(graft.join.Clip.clip(polys, bigMask, maxMaskRows = 10).count() == 1)
+  }
+
+  test("sjoin_nearest: broadcast, bounded grid and unbounded grid agree on columns and rows, distance last") {
+    // pid 1 sits halfway between tid 0 and tid 1 (a tie); tid 2 is nobody's nearest
+    val pts = Seq((0, "p0", Wkb.write(GeomOps.point(0, 0))), (1, "p1", Wkb.write(GeomOps.point(5, 0))),
+      (2, "p2", Wkb.write(GeomOps.point(11, 1)))).toDF("pid", "a", "geometry")
+    val targets = Seq((0, "t0", Wkb.write(GeomOps.point(1, 0))), (1, "t1", Wkb.write(GeomOps.point(9, 0))),
+      (2, "t2", Wkb.write(GeomOps.point(40, 40)))).toDF("tid", "name", "geometry")
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }.mkString("|")).sorted.toSeq
+    for (how <- Seq("inner", "left", "right")) {
+      def run(threshold: Long, maxDistance: Option[Double]) = SJoinNearest.sjoinNearest(pts, targets, how,
+        maxDistance = maxDistance, distanceCol = Some("d"), broadcastThreshold = threshold)
+      val broadcast = run(2000000L, None)
+      val bounded = run(-1L, Some(100.0))
+      val unbounded = run(-1L, None)
+      assert(broadcast.columns.last == "d", s"$how: ${broadcast.columns.toSeq}")
+      for ((name, df) <- Seq("bounded grid" -> bounded, "unbounded grid" -> unbounded)) {
+        assert(df.columns.toSeq == broadcast.columns.toSeq, s"$how, $name")
+        assert(rows(df) == rows(broadcast), s"$how, $name")
+      }
+      val want = if (how == "right") 3L else 4L
+      assert(broadcast.count() == want, how)
+    }
   }
 }
