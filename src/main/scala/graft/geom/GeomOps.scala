@@ -12,7 +12,7 @@ import org.locationtech.jts.linearref.LengthIndexedLine
 import org.locationtech.jts.operation.buffer.{BufferOp, BufferParameters, OffsetCurve}
 import org.locationtech.jts.operation.distance.DistanceOp
 import org.locationtech.jts.operation.linemerge.LineMerger
-import org.locationtech.jts.operation.overlayng.{PrecisionUtil, UnaryUnionNG}
+import org.locationtech.jts.operation.overlayng.{OverlayNGRobust, PrecisionUtil, UnaryUnionNG}
 import org.locationtech.jts.operation.polygonize.Polygonizer
 import org.locationtech.jts.operation.union.UnaryUnionOp
 import org.locationtech.jts.precision.{GeometryPrecisionReducer, MinimumClearance}
@@ -389,19 +389,22 @@ object GeomOps {
   def union(a: Geometry, b: Geometry): Geometry = a.union(b)
   def difference(a: Geometry, b: Geometry): Geometry = a.difference(b)
   def symDifference(a: Geometry, b: Geometry): Geometry = a.symDifference(b)
-  /** Union of the non-null geometries, null when there is none. JTS's
-    * cascaded UnaryUnion can throw `TopologyException` ("Ring edge
-    * missing") on overlay-cut pieces even after its own robust fallbacks;
-    * the retry snap-rounds every input to a grid scaled to their extent
-    * (`PrecisionUtil.safeScale`: about 14 significant digits) and unions
-    * with OverlayNG, whose snap-rounding noder is robust. */
+  /** Union of the non-null geometries, null when there is none, through
+    * OverlayNG (`OverlayNGRobust`, which retries with snapping and then
+    * snap-rounding), as GEOS unions from 3.9 on. JTS's legacy cascaded
+    * UnaryUnion returned an invalid union, silently, for overlay-cut pieces
+    * (`dissolve_z147_pieces.wkbhex`). A `TopologyException` that OverlayNG
+    * still throws ("Ring edge missing", `union_ring_edge_missing.wkbhex`)
+    * is retried once on a grid scaled to the inputs' extent
+    * (`PrecisionUtil.safeScale`: about 14 significant digits). */
   def unionAll(gs: Seq[Geometry]): Geometry = {
     val nonNull = gs.filter(g => g != null)
     if (nonNull.isEmpty) null
-    else try UnaryUnionOp.union(nonNull.asJava) catch {
-      case _: TopologyException =>
-        val all = gf.buildGeometry(nonNull.asJava)
-        UnaryUnionNG.union(all, new PrecisionModel(PrecisionUtil.safeScale(all)))
+    else {
+      val all = gf.buildGeometry(nonNull.asJava)
+      try OverlayNGRobust.union(all) catch {
+        case _: TopologyException => UnaryUnionNG.union(all, new PrecisionModel(PrecisionUtil.safeScale(all)))
+      }
     }
   }
   def intersectionAll(gs: Seq[Geometry]): Geometry = {

@@ -7,12 +7,15 @@ import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GeneratorOuter, JoinedRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan, SQLExecution}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, StructType}
 import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.index.strtree.STRtree
+import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration.Duration
 
 /** The build side of a broadcast join: its rows, collected once as internal
   * rows, and an STRtree over their geometries. GeoPandas caches the tree on
@@ -101,13 +104,62 @@ private[graft] final class BroadcastIndex(val schema: StructType, val rows: Arra
 
 private[graft] object BroadcastIndex {
 
-  /** `build` collected once, as internal rows, and broadcast as an index on
-    * its `geom` column. */
-  def apply(build: DataFrame, geom: String): Broadcast[BroadcastIndex] = {
-    val qe = build.queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
-    build.sparkSession.sparkContext.broadcast(
-      new BroadcastIndex(build.schema, rows, build.schema.fieldIndex(geom)))
+  /** `build` collected as internal rows and broadcast as an index on its
+    * `geom` column, or None when it has more than `cap` rows (and, with no
+    * job, when `cap < 0`). */
+  def upTo(build: DataFrame, geom: String, cap: Long): Option[Broadcast[BroadcastIndex]] =
+    collectUpTo(build, cap).map(rows => build.sparkSession.sparkContext.broadcast(
+      new BroadcastIndex(build.schema, rows, build.schema.fieldIndex(geom))))
+
+  /** `df`'s rows if it has at most `cap` of them, else None; a negative
+    * `cap` runs no job and returns None. The size test and the collect are
+    * one SQL execution of one job: each task copies at most `cap + 1` rows
+    * of its partition and returns only an overflow mark (null) when its
+    * partition holds more. The driver keeps the tasks' rows while their
+    * running total is at most `cap`; once it passes, the driver drops them
+    * and cancels the job. So the driver holds about `cap` rows at most,
+    * what a broadcast at the threshold holds anyway, and a large side costs
+    * one short-circuited task per partition. A plan that is already a
+    * local table is read on the driver with no job. */
+  def collectUpTo(df: DataFrame, cap: Long): Option[Array[InternalRow]] =
+    if (cap < 0) None
+    else {
+      val qe = df.queryExecution
+      qe.executedPlan match {
+        case local: LocalTableScanExec => Some(local.executeCollect()).filter(_.length <= cap)
+        case plan => SQLExecution.withNewExecutionId(qe, Some("collect"))(boundedCollect(plan, cap))
+      }
+    }
+
+  private def boundedCollect(plan: SparkPlan, cap: Long): Option[Array[InternalRow]] = {
+    val rdd = plan.execute()
+    val perTask = if (cap == Long.MaxValue) cap else cap + 1
+    val held = new Array[Array[InternalRow]](rdd.getNumPartitions)
+    var total = 0L
+    val overflow = Promise[Unit]()
+    // the handler runs on the scheduler's thread, one task result at a time
+    val job = rdd.sparkContext.submitJob(rdd,
+      (it: Iterator[InternalRow]) => {
+        val buf = ArrayBuffer.empty[InternalRow]
+        while (buf.length < perTask && it.hasNext) buf += it.next().copy()
+        if (buf.length < perTask) buf.toArray else null
+      },
+      0 until rdd.getNumPartitions,
+      (i: Int, rows: Array[InternalRow]) =>
+        if (!overflow.isCompleted) {
+          if (rows != null && total + rows.length <= cap) { held(i) = rows; total += rows.length }
+          else { java.util.Arrays.fill(held.asInstanceOf[Array[AnyRef]], null); overflow.trySuccess(()) }
+        },
+      ())
+    Await.ready(Future.firstCompletedOf(Seq(job, overflow.future))(ExecutionContext.parasitic), Duration.Inf)
+    if (overflow.isCompleted) {
+      job.cancel()
+      Await.ready(job, Duration.Inf)
+      None
+    } else {
+      Await.result(job, Duration.Inf) // rethrows a failed job's exception as a collect would
+      Some(held.flatten)
+    }
   }
 }
 

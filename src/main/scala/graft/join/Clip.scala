@@ -21,18 +21,16 @@ object Clip {
     * ref clip.py:214). */
   def clip(df: DataFrame, mask: DataFrame, geom: String = "geometry", maskGeom: String = "geometry",
            keepGeomType: Boolean = false, maxMaskRows: Long = 100000L): DataFrame = {
-    val maskNonNull = mask.select(col(maskGeom)).na.drop()
-    // the mask is dissolved on the driver, so guard the collect with a
-    // short-circuiting limit (same pattern as Gpkg.write) instead of
-    // letting an over-cap mask OOM the driver
-    if (maxMaskRows >= 0) {
-      val upTo = maskNonNull.limit((maxMaskRows + 1).min(Int.MaxValue - 1L).toInt).count()
-      require(upTo <= maxMaskRows,
-        s"Clip mask exceeds $maxMaskRows rows; a clip mask is a small geometry " +
-        s"set unioned on the driver — dissolve it first or use overlay() for " +
-        s"frame-vs-frame intersection at scale")
-    }
-    val maskGeoms = maskNonNull.collect().map(_.getAs[Array[Byte]](0))
+    // the mask is dissolved on the driver, so its collect is bounded: one
+    // job that stops once the mask passes `maxMaskRows` (negative: no cap)
+    // instead of letting an over-cap mask OOM the driver
+    val maskRows = BroadcastIndex.collectUpTo(mask.select(col(maskGeom)).na.drop(),
+      if (maxMaskRows < 0) Long.MaxValue else maxMaskRows)
+    require(maskRows.isDefined,
+      s"Clip mask exceeds $maxMaskRows rows; a clip mask is a small geometry " +
+      s"set unioned on the driver — dissolve it first or use overlay() for " +
+      s"frame-vs-frame intersection at scale")
+    val maskGeoms = maskRows.get.map(_.getBinary(0))
     if (maskGeoms.isEmpty) return df.limit(0)
     val unioned = GeomOps.unionAll(maskGeoms.map(Wkb.read).toSeq)
     clipByGeometry(df, unioned, geom, keepGeomType)

@@ -1,6 +1,7 @@
 package graft.join
 
 import graft.geom.Wkb
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,11 +51,12 @@ object SJoinNearest {
       else (right, rightGeom)
     val (l2, r2) = SpatialJoin.applySuffixes(left, rightRenamed, leftGeom, rGeomName, lsuffix, rsuffix)
 
-    if (SpatialJoin.countUpTo(right, broadcastThreshold) <= broadcastThreshold)
-      broadcastNearest(l2, r2, how, leftGeom, rGeomName, maxDistance, distanceCol, exclusive)
-    else maxDistance match {
-      case Some(md) => gridNearest(l2, r2, how, leftGeom, rGeomName, md, distanceCol, exclusive)
-      case None     => gridNearestAuto(l2, r2, how, leftGeom, rGeomName, distanceCol, exclusive)
+    BroadcastIndex.upTo(r2, rGeomName, broadcastThreshold) match {
+      case Some(index) => broadcastNearest(l2, index, how, leftGeom, rGeomName, maxDistance, distanceCol, exclusive)
+      case None => maxDistance match {
+        case Some(md) => gridNearest(l2, r2, how, leftGeom, rGeomName, md, distanceCol, exclusive)
+        case None     => gridNearestAuto(l2, r2, how, leftGeom, rGeomName, distanceCol, exclusive)
+      }
     }
   }
 
@@ -278,13 +280,13 @@ object SJoinNearest {
     pinned
   }
 
-  private def broadcastNearest(l2: DataFrame, r2: DataFrame, how: String,
+  private def broadcastNearest(l2: DataFrame, index: Broadcast[BroadcastIndex], how: String,
                                leftGeom: String, rGeomName: String,
                                maxDistance: Option[Double], distanceCol: Option[String],
                                exclusive: Boolean): DataFrame = {
     val nearest = BroadcastProbe.Nearest(maxDistance.getOrElse(Double.PositiveInfinity), exclusive,
       distanceCol.getOrElse("__graft_dist"))
-    val res = BroadcastProbe.join(l2, leftGeom, BroadcastIndex(r2, rGeomName), nearest, outer = how == "left")
+    val res = BroadcastProbe.join(l2, leftGeom, index, nearest, outer = how == "left")
       .drop(rGeomName)
     if (distanceCol.isEmpty) res.drop("__graft_dist") else res
   }

@@ -2,10 +2,12 @@ package graft.join
 
 import graft.geom.Wkb
 import graft.plans.Fence
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Geometry
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
+import scala.collection.mutable
 
 /** Distributed spatial predicate join — the engine's version of the
   * reference's `sjoin` (`geopandas/tools/sjoin.py:12-515`).
@@ -14,9 +16,10 @@ import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory
   * reference's single hard-coded strategy of "STRtree on one side",
   * `sjoin.py:212-268`, but distributed):
   *
-  *  1. '''Broadcast''': the small side is collected once and broadcast as
-  *     a [[BroadcastIndex]], whose STRtree and prepared geometries are
-  *     built once per executor JVM. Each stream row's geometry probes it
+  *  1. '''Broadcast''': the small side is collected once, by the
+  *     bounded collect that also finds it small ([[BroadcastIndex.upTo]]),
+  *     and broadcast as a [[BroadcastIndex]], whose STRtree and prepared
+  *     geometries are built once per executor JVM. Each stream row's geometry probes it
   *     through one generator ([[BroadcastProbe]]) that emits the matching
   *     build rows themselves: Spark's own `Generate` assembles the output
   *     rows and, for `how=left`/`right`, null-extends a stream row with no
@@ -113,10 +116,27 @@ object SpatialJoin {
     }
   }
 
-  /** `df.count()` capped at `cap + 1` — the limit short-circuits the scan, so
-    * "is this side small?" never costs a full pass over a 100 TB side. */
-  private[graft] def countUpTo(df: DataFrame, cap: Long): Long =
-    if (cap < 0) Long.MaxValue else df.limit((cap + 1).min(Int.MaxValue - 1L).toInt).count()
+  /** The frames that broadcast builds found over the threshold, by name,
+    * and the names of one join's `left` and `right` frames. A caller that
+    * joins the same frames more than once (overlay) passes one to every
+    * join, so no frame is tried twice. */
+  private[graft] final case class Oversized(names: mutable.Set[String], left: String, right: String) {
+    def swap: Oversized = copy(left = right, right = left)
+
+    /** `df`, the frame called `name`, as a broadcast index on `geom`, unless
+      * it is known or found to hold more than `cap` rows. */
+    def build(df: DataFrame, geom: String, name: String, cap: Long): Option[Broadcast[BroadcastIndex]] =
+      if (names(name)) None
+      else {
+        val index = BroadcastIndex.upTo(df, geom, cap)
+        if (index.isEmpty) names += name
+        index
+      }
+  }
+
+  private[graft] object Oversized {
+    def none(): Oversized = Oversized(mutable.Set.empty, "left", "right")
+  }
 
   private[graft] def sjoinCore(left: DataFrame, right: DataFrame,
             predicate: String, how: String,
@@ -124,7 +144,7 @@ object SpatialJoin {
             lsuffix: String = "left", rsuffix: String = "right",
             distance: Double = 0.0, onAttribute: Seq[String] = Nil,
             broadcastThreshold: Long = 2000000L,
-            leftCountHint: Option[Long] = None, rightCountHint: Option[Long] = None,
+            oversized: Oversized = Oversized.none(),
             gridOverride: Option[GridSpec] = None): DataFrame = {
     require(Predicates.contains(predicate), s"predicate must be one of $Predicates")
     require(Seq("inner", "left", "right").contains(how), s"how must be inner/left/right, got $how")
@@ -138,38 +158,33 @@ object SpatialJoin {
     val onAttrL = onAttribute.map(a => if (l2.columns.contains(a + s"_$lsuffix")) a + s"_$lsuffix" else a)
     val onAttrR = onAttribute.map(a => if (r2.columns.contains(a + s"_$rsuffix")) a + s"_$rsuffix" else a)
 
-    // Strategy choice needs only "is either side small?" — count AT MOST
-    // threshold+1 rows per side (limit short-circuits the scan) instead of
-    // a full count, which would be two extra full passes at 100 TB. The
-    // counts are LAZY: outer hows fix the build side so only ITS count is
-    // ever taken, and an inner join skips the left probe entirely whenever
-    // the right side already fits under the threshold — one probe job per
-    // sjoin in the common case instead of two. Callers that issue several
-    // sjoins over the same frames (overlay) pass hints to probe once.
-    lazy val rightCount = rightCountHint.getOrElse(countUpTo(right, broadcastThreshold))
-    lazy val leftCount = leftCountHint.getOrElse(countUpTo(left, broadcastThreshold))
-    // `how` forces the build side (the outer side must stream); broadcast is
-    // only safe when THAT side is small — a small outer side with a huge
-    // inner side must take the grid path, not collect the huge side.
-    // (For inner, a right side under the threshold broadcasts even if the
-    // left is smaller still — both fit in memory, and skipping the second
-    // probe job beats shaving an already-small broadcast.)
-    val buildRight = how match {
-      case "left"  => true                    // left must stream (outer rows preserved)
-      case "right" => false                   // right must stream
-      case _       => rightCount <= broadcastThreshold || rightCount <= leftCount
+    // The broadcast build, and whether it is the right side. `how` forces
+    // the side (the outer side must stream), so a small outer side with a
+    // huge inner side takes the grid path instead of collecting the huge
+    // side; an inner join tries the right side, then the left. Each try is
+    // one bounded collect that stops once the side passes the threshold,
+    // so choosing the strategy and collecting the build are the same job.
+    def buildOf(l: DataFrame, r: DataFrame, how: String): Option[(Broadcast[BroadcastIndex], Boolean)] = {
+      def tryRight = oversized.build(r, rGeomName, oversized.right, broadcastThreshold).map(_ -> true)
+      def tryLeft = oversized.build(l, leftGeom, oversized.left, broadcastThreshold).map(_ -> false)
+      how match {
+        case "left"  => tryRight
+        case "right" => tryLeft
+        case _       => tryRight.orElse(tryLeft)
+      }
     }
-    val useBroadcast = (if (buildRight) rightCount else leftCount) <= broadcastThreshold
 
     def attrFilter(df: DataFrame): DataFrame =
       onAttrL.zip(onAttrR).foldLeft(df) { case (d, (a, b)) => d.filter(col(a) === col(b)) }
 
-    if (onAttribute.isEmpty || how == "inner") {
-      val joined =
-        if (useBroadcast) broadcastJoin(l2, r2, predicate, how, leftGeom, rGeomName, distance, buildRight)
-        else gridJoin(l2, r2, predicate, how, leftGeom, rGeomName, distance, gridOverride)
-      attrFilter(joined)
-    } else {
+    def join(l: DataFrame, r: DataFrame, how: String): DataFrame = buildOf(l, r, how) match {
+      case Some((index, buildRight)) =>
+        broadcastJoin(l, r, predicate, how, leftGeom, rGeomName, distance, index, buildRight)
+      case None => gridJoin(l, r, predicate, how, leftGeom, rGeomName, distance, gridOverride)
+    }
+
+    if (onAttribute.isEmpty || how == "inner") attrFilter(join(l2, r2, how))
+    else {
       // outer + on_attribute: the reference filters candidate PAIRS on the
       // attribute equality BEFORE the how adjustment (sjoin.py:574-586, then
       // _adjust_indexers sjoin.py:381-420). Filtering after the outer join
@@ -185,13 +200,7 @@ object SpatialJoin {
         if (outerIsLeft) (Pins.stampPinned(l2, idc), r2)
         else (l2, Pins.stampPinned(r2, idc))
       val outerSide = if (outerIsLeft) lo else ro
-      // inner pair join is free to build on either side; a small right side
-      // broadcasts without probing the left (same one-probe shortcut)
-      val innerBuildRight = rightCount <= broadcastThreshold || rightCount <= leftCount
-      val useBroadcastInner = (if (innerBuildRight) rightCount else leftCount) <= broadcastThreshold
-      val pairs = attrFilter(
-        if (useBroadcastInner) broadcastJoin(lo, ro, predicate, "inner", leftGeom, rGeomName, distance, innerBuildRight)
-        else gridJoin(lo, ro, predicate, "inner", leftGeom, rGeomName, distance, gridOverride))
+      val pairs = attrFilter(join(lo, ro, "inner"))
       val otherCols = pairs.columns.filter(c => !outerSide.columns.contains(c))
       val matches = pairs.select((Seq(col(idc)) ++ otherCols.map(col)): _*)
       val reattached =
@@ -205,13 +214,16 @@ object SpatialJoin {
   // Broadcast strategy
   // -------------------------------------------------------------------------
 
+  /** The stream side probes the build side's index and the build rows
+    * follow the stream row; a left build is then moved in front, so the
+    * left frame's columns come first on every path. */
   private def broadcastJoin(l2: DataFrame, r2: DataFrame, predicate: String, how: String,
                             leftGeom: String, rightGeom: String, distance: Double,
-                            buildRight: Boolean): DataFrame = {
-    val (stream, streamGeom, build, buildGeom) =
-      if (buildRight) (l2, leftGeom, r2, rightGeom) else (r2, rightGeom, l2, leftGeom)
-    BroadcastProbe.join(stream, streamGeom, BroadcastIndex(build, buildGeom),
+                            index: Broadcast[BroadcastIndex], buildRight: Boolean): DataFrame = {
+    val (stream, streamGeom) = if (buildRight) (l2, leftGeom) else (r2, rightGeom)
+    val joined = BroadcastProbe.join(stream, streamGeom, index,
       BroadcastProbe.Predicate(predicate, buildRight, distance), outer = how != "inner")
+    if (buildRight) joined else joined.select((l2.columns ++ r2.columns).toSeq.map(col): _*)
   }
 
   // -------------------------------------------------------------------------

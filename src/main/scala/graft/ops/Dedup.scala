@@ -1038,8 +1038,8 @@ object Dedup {
     // the index side (always the small one: c rows/sig vs 64+c) — and
     // never driver-bound, unlike a broadcast, at corpus-scale rep counts.
     // join strategy by MEASURED rep count (callers pass a cached reps
-    // frame, so the bounded count warms the cache the main job reuses —
-    // the SpatialJoin countUpTo pattern): a small distinct-signature set
+    // frame, so the count, capped by a limit, warms the cache the main job
+    // reuses): a small distinct-signature set
     // broadcasts the index side and the probe explode never shuffles at
     // all; past the threshold pin shuffle-hash building on the index side
     // — never driver-bound, and never Catalyst's own choice, whose size

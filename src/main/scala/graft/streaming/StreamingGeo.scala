@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.api.GeoDataFrame
-import graft.join.{BroadcastIndex, BroadcastProbe, SpatialJoin}
+import graft.join.{BroadcastIndex, BroadcastProbe}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,17 +29,18 @@ object StreamingGeo {
                          streamGeom: String = "geometry",
                          keepUnmatched: Boolean = false,
                          broadcastThreshold: Long = 2000000L): DataFrame = {
-    // same guard as SpatialJoin: the static layer is collected + broadcast,
-    // so an over-threshold layer must fail loudly, not OOM the driver
-    require(broadcastThreshold < 0 || SpatialJoin.countUpTo(static.df, broadcastThreshold) <= broadcastThreshold,
+    // the static geometry is emitted under a private name and dropped, so a
+    // stream geometry of the same name stays unambiguous; the layer is
+    // collected and broadcast, so an over-threshold layer must fail loudly,
+    // not OOM the driver (a negative threshold sets no cap)
+    val staticGeom = "__graft_static_geom"
+    val index = BroadcastIndex.upTo(static.df.withColumnRenamed(static.geometryCol, staticGeom), staticGeom,
+      if (broadcastThreshold < 0) Long.MaxValue else broadcastThreshold)
+    require(index.isDefined,
       s"sjoinAgainstStatic broadcasts the static layer, which exceeds " +
       s"$broadcastThreshold rows; repartition-and-join the stream against " +
       s"it in batch, or raise broadcastThreshold if the driver can hold it")
-    // the static geometry is emitted under a private name and dropped, so a
-    // stream geometry of the same name stays unambiguous
-    val staticGeom = "__graft_static_geom"
-    val index = BroadcastIndex(static.df.withColumnRenamed(static.geometryCol, staticGeom), staticGeom)
-    BroadcastProbe.join(stream, streamGeom, index, BroadcastProbe.Predicate(predicate, buildIsRight = true, 0.0),
+    BroadcastProbe.join(stream, streamGeom, index.get, BroadcastProbe.Predicate(predicate, buildIsRight = true, 0.0),
       keepUnmatched).drop(staticGeom)
   }
 

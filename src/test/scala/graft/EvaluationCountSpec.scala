@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** How many times a frame's geometry is computed per row across every job
-  * an operator starts: its strategy probe, its build-side collect and the
-  * final action. `EvaluateOnceSpec` reads one optimized plan at a time, so
-  * it cannot see a second job re-running a plan. Here a deterministic
-  * identity UDF counts its calls in an accumulator. */
+  * an operator starts: its bounded build-side collect, which also chooses
+  * the strategy, and the final action. `EvaluateOnceSpec` reads one
+  * optimized plan at a time, so it cannot see a second job re-running a
+  * plan. Here a deterministic identity UDF counts its calls in an
+  * accumulator. */
 class EvaluationCountSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -43,23 +44,23 @@ class EvaluationCountSpec extends AnyFunSuite {
   private lazy val mask = boxes("m", (0, 0, 11, 11))
   private lazy val probes = points((1, 1), (3.5, 3.5), (11, 11), (30, 30), (6, 6))
 
-  test("a clip output under a left broadcast sjoin is clipped twice per row: probe and collect") {
+  test("a clip output under a left broadcast sjoin is clipped once per row: the bounded build") {
     val n = counted(boxes("id", polys: _*)) { src =>
       val joined = SpatialJoin.sjoin(probes, Clip.clip(src, mask).select("id", "geometry"), how = "left")
       assert(joined.select("pid", "id").as[(Int, Option[Int])].collect().sorted.toSeq ==
         Seq((0, Some(0)), (1, Some(0)), (1, Some(1)), (2, Some(2)), (3, None), (4, Some(1))))
     }
-    assert(n == 2L * polys.size, s"$n calls for ${polys.size} rows")
+    assert(n == polys.size.toLong, s"$n calls for ${polys.size} rows")
   }
 
-  test("the build side of a broadcast sjoin_nearest is computed twice per row") {
+  test("the build side of a broadcast sjoin_nearest is computed once per row") {
     val n = counted(boxes("id", polys: _*)) { src =>
       val joined = SJoinNearest.sjoinNearest(probes, Clip.clip(src, mask).select("id", "geometry"),
         how = "left", distanceCol = Some("d"))
       assert(joined.select("pid", "id").as[(Int, Option[Int])].collect().sorted.toSeq ==
         Seq((0, Some(0)), (1, Some(0)), (1, Some(1)), (2, Some(2)), (3, Some(2)), (4, Some(1))))
     }
-    assert(n == 2L * polys.size, s"$n calls for ${polys.size} rows")
+    assert(n == polys.size.toLong, s"$n calls for ${polys.size} rows")
   }
 
   private def differenceCalls(keepGeomType: Boolean): Long = {
@@ -78,9 +79,9 @@ class EvaluationCountSpec extends AnyFunSuite {
     assert(n == polys.size.toLong, s"$n calls for ${polys.size} rows")
   }
 
-  test("with keepGeomType (the default) the difference also makes the first left row to find its type") {
+  test("with keepGeomType (the default) the difference's left frame still runs once per row") {
     val n = differenceCalls(keepGeomType = true)
-    assert(n == polys.size + 1L, s"$n calls for ${polys.size} rows")
+    assert(n == polys.size.toLong, s"$n calls for ${polys.size} rows")
   }
 
   test("a left broadcast sjoin over a stored build side keeps every probe row") {
@@ -90,42 +91,12 @@ class EvaluationCountSpec extends AnyFunSuite {
       Seq((0, Some(0)), (1, Some(0)), (1, Some(1)), (2, Some(2)), (3, None), (4, Some(1))))
   }
 
-  /** Jobs started while `action` runs, counted by a listener on the
-    * action's job group. Listener events arrive asynchronously and in
-    * order, so the count is read once a marker job's start has arrived. */
-  private def jobsOf(action: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group`                    => jobs.incrementAndGet()
-          case g if g == s"$group-marker" => flushed.countDown()
-          case _                          =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      def inGroup(g: String)(body: => Unit): Unit = {
-        sc.setJobGroup(g, g)
-        try body finally sc.clearJobGroup()
-      }
-      inGroup(group)(action)
-      inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
-      assert(flushed.await(10, java.util.concurrent.TimeUnit.SECONDS), "the marker job's start never arrived")
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("a built broadcast sjoin runs one job when it executes, over a stored or a computed build side") {
     val stored = boxes("id", polys: _*).select("id", "geometry")
     val computed = Clip.clip(boxes("id", polys: _*), mask).select("id", "geometry")
     for ((name, build) <- Seq("stored" -> stored, "computed" -> computed); how <- Seq("inner", "left")) {
       val joined = SpatialJoin.sjoin(probes, build, how = how).select("pid", "id")
-      var rows = Seq.empty[(Int, Option[Int])]
-      val n = jobsOf { rows = joined.as[(Int, Option[Int])].collect().toSeq }
+      val (rows, n) = SparkTestBase.jobsDuring(joined.as[(Int, Option[Int])].collect().toSeq)
       assert(n == 1, s"$name $how build: $n jobs")
       assert(rows.flatMap { case (p, id) => id.map(p -> _) }.sorted == Seq((0, 0), (1, 0), (1, 1), (2, 2), (4, 1)),
         s"$name $how build")

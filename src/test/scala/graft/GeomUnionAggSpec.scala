@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 import org.locationtech.jts.geom.{Geometry, TopologyException}
 import org.locationtech.jts.io.WKBReader
+import org.locationtech.jts.operation.overlayng.OverlayNGRobust
 import org.locationtech.jts.operation.union.UnaryUnionOp
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -144,5 +145,31 @@ class GeomUnionAggSpec extends AnyFunSuite {
     assert(u.isValid)
     assert(u.getArea <= pieces.map(_.getArea).sum)
     pieces.foreach(p => assert(math.abs(u.intersection(p).getArea - p.getArea) < 1e-6 * p.getArea))
+  }
+
+  test("st_union_agg and dissolve give a valid union of overlay-cut pieces on every partition split") {
+    // the 44 overlay pieces of zone z147 in perfbench's overlay_dissolve,
+    // seed 1304: JTS's legacy cascaded UnaryUnion returns an invalid union
+    // of them (area 3083.913784) and throws nothing; OverlayNG's union is
+    // valid (area 3083.751908)
+    val reader = new WKBReader()
+    val pieces: Seq[Geometry] = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/fixtures/dissolve_z147_pieces.wkbhex"))
+      .getLines().filter(_.nonEmpty).map(h => reader.read(WKBReader.hexToBytes(h))).toSeq
+    assert(pieces.size == 44 && pieces.forall(_.isValid))
+    assert(!UnaryUnionOp.union(pieces.asJava).isValid)
+    val want = OverlayNGRobust.union(Wkb.factory.buildGeometry(pieces.asJava)).getArea
+    val df = pieces.zipWithIndex.map { case (g, i) => (i, "z147", Wkb.write(g)) }.toDF("i", "zone", "geometry")
+    for (parts <- Seq(1, 2, 3, 5)) {
+      val split = df.repartitionByRange(parts, col("i"))
+      val viaAgg = split.agg(GeoAggregates.st_union_agg(col("geometry"))).head().getAs[Array[Byte]](0)
+      val viaDissolve = graft.api.GeoDataFrame(split.select("zone", "geometry")).dissolve(by = Seq("zone"))
+        .df.select("geometry").head().getAs[Array[Byte]](0)
+      for ((name, wkb) <- Seq("st_union_agg" -> viaAgg, "dissolve" -> viaDissolve)) {
+        val u = Wkb.read(wkb)
+        assert(u.isValid, s"$name over $parts partitions")
+        assert(math.abs(u.getArea - want) <= 1e-9 * want, s"$name over $parts partitions: area ${u.getArea}, want $want")
+      }
+    }
   }
 }

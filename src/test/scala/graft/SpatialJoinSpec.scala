@@ -394,6 +394,54 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(Overlay.overlay(df1, df2, "intersection").count() == 0)
   }
 
+  private def geomRows(wkts: (Int, String)*): DataFrame = {
+    val reader = new org.locationtech.jts.io.WKTReader()
+    wkts.map { case (i, w) => (i, Wkb.write(reader.read(w))) }.toDF("a", "geometry")
+  }
+
+  private def typesBy(df: DataFrame, key: String): Seq[(Option[Int], String)] =
+    df.select(col(key), st_geometrytype(col("geometry"))).as[(Option[Int], String)].collect().toSeq.sorted
+
+  test("overlay keep_geom_type filters each df1 row by the family of its geometry before make_valid") {
+    // row 0 is a polygon collapsed onto a segment that crosses df2's square;
+    // row 1 shares only an edge with it. Both are polygon rows, so neither
+    // leaves a line. (This engine's make_valid drops collapsed parts, so
+    // row 0 is repaired to an empty polygon, not to a line.)
+    val df1 = geomRows(0 -> "POLYGON ((0 1, 4 1, 2 1, 0 1))", 1 -> "POLYGON ((-2 0, 1 0, 1 2, -2 2, -2 0))")
+    val df2 = squares("b", (1, 0, 3, 3))
+    assert(Overlay.overlay(df1, df2, "intersection").count() == 0)
+    assert(typesBy(Overlay.overlay(df1, df2, "intersection", keepGeomType = false), "a") ==
+      Seq((Some(1), "LineString")))
+  }
+
+  test("overlay keep_geom_type over a df1 that mixes families keeps each row's own family") {
+    // GeoPandas refuses such a df1 (overlay.py:303-308); here each df1 row
+    // keeps the family of its own geometry, whatever the row order
+    val df2 = squares("b", (1, 0, 3, 3))
+    for (rows <- Seq(Seq(0 -> "LINESTRING (0 1, 4 1)", 1 -> "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"),
+                     Seq(1 -> "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", 0 -> "LINESTRING (0 1, 4 1)"))) {
+      val df1 = geomRows(rows: _*)
+      for (how <- Seq("intersection", "identity")) {
+        val want = if (how == "intersection") Seq((Some(0), "LineString"), (Some(1), "Polygon"))
+                   else Seq((Some(0), "LineString"), (Some(0), "MultiLineString"), (Some(1), "Polygon"), (Some(1), "Polygon"))
+        assert(typesBy(Overlay.overlay(df1, df2, how), "a") == want, s"$how, rows $rows")
+      }
+    }
+  }
+
+  test("overlay union and symmetric_difference filter df2's rows by df1's family") {
+    val df1 = squares("a", (0, 0, 2, 2))
+    val df2 = geomRows(0 -> "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))", 1 -> "LINESTRING (10 10, 12 12)")
+      .withColumnRenamed("a", "b")
+    for (how <- Seq("union", "symmetric_difference")) {
+      val kept = typesBy(Overlay.overlay(df1, df2, how), "b")
+      val all = typesBy(Overlay.overlay(df1, df2, how, keepGeomType = false), "b")
+      assert(all.contains((Some(1), "LineString")), how)
+      assert(kept == all.filterNot(_._2 == "LineString"), how)
+      assert(kept.map(_._2).forall(_ == "Polygon") && kept.contains((Some(0), "Polygon")), how)
+    }
+  }
+
   test("clip by rect: intersect + geometry rewrite, points passthrough") {
     val polys = squares("id", (0, 0, 4, 4), (10, 10, 12, 12))
     val clipped = graft.join.Clip.clipByRect(polys, 1, 1, 3, 3)

@@ -664,32 +664,6 @@ class VecAndDedupSpec extends AnyFunSuite {
     assert(full.forall(_._2 == 1L))
   }
 
-  /** `build`'s result and the Spark jobs started while it ran. Listener
-    * events are asynchronous but delivered in order, so a tiny marker job
-    * before and after flushes the bus: once the marker's start lands, every
-    * earlier event has too. */
-  private def jobsDuring[T](build: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def flushMarker(): Unit = {
-        val seen = jobs.get()
-        spark.sparkContext.parallelize(Seq(1), 1).count()
-        val deadline = System.nanoTime() + 10e9.toLong
-        while (jobs.get() <= seen && System.nanoTime() < deadline) Thread.sleep(20)
-      }
-      flushMarker()
-      val before = jobs.get()
-      val out = build
-      flushMarker()
-      (out, jobs.get() - before - 1)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("connected-components family runs no job at construction") {
     val dir = java.nio.file.Files.createTempDirectory("cc_lazy").toString
     try {
@@ -704,7 +678,7 @@ class VecAndDedupSpec extends AnyFunSuite {
       val spairs = spark.read.parquet(s"$dir/spairs")
       val newPairs = spark.read.parquet(s"$dir/newpairs")
       val scored = spark.read.parquet(s"$dir/scored")
-      val ((cc, scc, inc, keep, split), jobs) = jobsDuring((
+      val ((cc, scc, inc, keep, split), jobs) = SparkTestBase.jobsDuring((
         Dedup.connectedComponents(pairs),
         Dedup.connectedComponents(spairs),
         Dedup.connectedComponentsIncremental(Dedup.connectedComponents(pairs), newPairs),
