@@ -1,11 +1,13 @@
 package graft.join
 
 import graft.geom.Wkb
+import java.io.{ByteArrayInputStream, DataInputStream, DataOutputStream, OutputStream, SequenceInputStream}
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GeneratorOuter, JoinedRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GeneratorOuter, JoinedRow, UnaryExpression, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan, SQLExecution}
 import org.apache.spark.sql.functions.col
@@ -16,6 +18,7 @@ import org.locationtech.jts.index.strtree.STRtree
 import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
 /** The build side of a broadcast join: its rows, collected once as internal
   * rows, and an STRtree over their geometries. GeoPandas caches the tree on
@@ -105,50 +108,69 @@ private[graft] final class BroadcastIndex(val schema: StructType, val rows: Arra
 private[graft] object BroadcastIndex {
 
   /** `build` collected as internal rows and broadcast as an index on its
-    * `geom` column, or None when it has more than `cap` rows (and, with no
-    * job, when `cap < 0`). */
+    * `geom` column, or None when it has more than `cap` rows or more
+    * compressed bytes than a collect may ship ([[resultBudget]]), and, with
+    * no job, when `cap < 0`. */
   def upTo(build: DataFrame, geom: String, cap: Long): Option[Broadcast[BroadcastIndex]] =
     collectUpTo(build, cap).map(rows => build.sparkSession.sparkContext.broadcast(
       new BroadcastIndex(build.schema, rows, build.schema.fieldIndex(geom))))
 
-  /** `df`'s rows if it has at most `cap` of them, else None; a negative
-    * `cap` runs no job and returns None. The size test and the collect are
-    * one SQL execution of one job: each task copies at most `cap + 1` rows
-    * of its partition and returns only an overflow mark (null) when its
-    * partition holds more. The driver keeps the tasks' rows while their
-    * running total is at most `cap`; once it passes, the driver drops them
-    * and cancels the job. So the driver holds about `cap` rows at most,
-    * what a broadcast at the threshold holds anyway, and a large side costs
-    * one short-circuited task per partition. A plan that is already a
-    * local table is read on the driver with no job. */
+  /** `df`'s rows if it has at most `cap` of them and their compressed
+    * bytes at most `maxBytes`, else None; a negative `cap` runs no job and
+    * returns None. The size test and the collect are one SQL execution of
+    * one job. Each task compresses its partition's rows as
+    * `SparkPlan.executeCollect` ships them and stops at `cap + 1` rows or
+    * past `maxBytes` bytes, returning only an overflow mark (null). The
+    * driver keeps the tasks' bytes while their running totals are within
+    * `cap` rows and `maxBytes` bytes; once either passes, the driver drops
+    * them and cancels the job. So a task holds at most about `maxBytes`
+    * compressed bytes and no row copies, the driver about `maxBytes` bytes
+    * and, decoded, at most `cap` rows, and a large side costs one
+    * short-circuited task per partition. A plan that is already a local
+    * table is read on the driver with no job. */
   def collectUpTo(df: DataFrame, cap: Long): Option[Array[InternalRow]] =
+    collectUpTo(df, cap, resultBudget(df.sparkSession.sparkContext.getConf))
+
+  def collectUpTo(df: DataFrame, cap: Long, maxBytes: Long): Option[Array[InternalRow]] =
     if (cap < 0) None
     else {
       val qe = df.queryExecution
       qe.executedPlan match {
         case local: LocalTableScanExec => Some(local.executeCollect()).filter(_.length <= cap)
-        case plan => SQLExecution.withNewExecutionId(qe, Some("collect"))(boundedCollect(plan, cap))
+        case plan => SQLExecution.withNewExecutionId(qe, Some("collect"))(boundedCollect(plan, cap, maxBytes))
       }
     }
 
-  private def boundedCollect(plan: SparkPlan, cap: Long): Option[Array[InternalRow]] = {
+  /** The compressed bytes a bounded collect may ship. Spark adds each task
+    * result to a running total and fails the job once it passes
+    * `spark.driver.maxResultSize`, before the result handler sees that
+    * result, and up to `spark.resultGetter.threads` results can be between
+    * that check and the handler. With every task and the handled total
+    * within this budget, the check cannot fail before the handler has seen
+    * the overflow; past it the side takes the grid path. */
+  private[graft] def resultBudget(conf: SparkConf): Long = {
+    val max = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val threads = conf.getInt("spark.resultGetter.threads", 4)
+    if (max > 0) max / (threads + 2) else Long.MaxValue
+  }
+
+  private def boundedCollect(plan: SparkPlan, cap: Long, maxBytes: Long): Option[Array[InternalRow]] = {
     val rdd = plan.execute()
     val perTask = if (cap == Long.MaxValue) cap else cap + 1
-    val held = new Array[Array[InternalRow]](rdd.getNumPartitions)
-    var total = 0L
+    val held = new Array[Array[Array[Byte]]](rdd.getNumPartitions)
+    var rows = 0L
+    var bytes = 0L
     val overflow = Promise[Unit]()
     // the handler runs on the scheduler's thread, one task result at a time
     val job = rdd.sparkContext.submitJob(rdd,
-      (it: Iterator[InternalRow]) => {
-        val buf = ArrayBuffer.empty[InternalRow]
-        while (buf.length < perTask && it.hasNext) buf += it.next().copy()
-        if (buf.length < perTask) buf.toArray else null
-      },
+      (it: Iterator[InternalRow]) => encode(it, perTask, maxBytes),
       0 until rdd.getNumPartitions,
-      (i: Int, rows: Array[InternalRow]) =>
+      (i: Int, part: (Long, Array[Array[Byte]])) =>
         if (!overflow.isCompleted) {
-          if (rows != null && total + rows.length <= cap) { held(i) = rows; total += rows.length }
-          else { java.util.Arrays.fill(held.asInstanceOf[Array[AnyRef]], null); overflow.trySuccess(()) }
+          val partBytes = if (part == null) 0L else part._2.iterator.map(_.length.toLong).sum
+          if (part != null && rows + part._1 <= cap && bytes + partBytes <= maxBytes) {
+            held(i) = part._2; rows += part._1; bytes += partBytes
+          } else { java.util.Arrays.fill(held.asInstanceOf[Array[AnyRef]], null); overflow.trySuccess(()) }
         },
       ())
     Await.ready(Future.firstCompletedOf(Seq(job, overflow.future))(ExecutionContext.parasitic), Duration.Inf)
@@ -158,7 +180,72 @@ private[graft] object BroadcastIndex {
       None
     } else {
       Await.result(job, Duration.Inf) // rethrows a failed job's exception as a collect would
-      Some(held.flatten)
+      val out = ArrayBuffer.empty[InternalRow]
+      held.foreach(decode(_, plan.output.length, out))
+      Some(out.toArray)
+    }
+  }
+
+  /** Fewer than `maxRows` rows of a partition with their count, compressed
+    * as `SparkPlan.executeCollect` ships them: each row's size and bytes,
+    * then -1. Null, the overflow mark, once the partition reaches `maxRows`
+    * rows or its bytes pass `maxBytes`. */
+  private def encode(it: Iterator[InternalRow], maxRows: Long, maxBytes: Long): (Long, Array[Array[Byte]]) = {
+    val bytes = new ChunkedBytes
+    val out = new DataOutputStream(GraftColumnBridge.compressionCodec(SparkEnv.get.conf).compressedOutputStream(bytes))
+    val buffer = new Array[Byte](4 << 10)
+    var n = 0L
+    while (n < maxRows && bytes.size <= maxBytes && it.hasNext) {
+      val row = it.next().asInstanceOf[UnsafeRow]
+      out.writeInt(row.getSizeInBytes)
+      row.writeToStream(out, buffer)
+      n += 1
+    }
+    out.writeInt(-1)
+    out.close()
+    if (n < maxRows && bytes.size <= maxBytes) (n, bytes.chunks) else null
+  }
+
+  private def decode(chunks: Array[Array[Byte]], nFields: Int, out: ArrayBuffer[InternalRow]): Unit = {
+    val in = new DataInputStream(GraftColumnBridge.compressionCodec(SparkEnv.get.conf).compressedInputStream(
+      new SequenceInputStream(chunks.iterator.map(c => new ByteArrayInputStream(c): java.io.InputStream).asJavaEnumeration)))
+    var size = in.readInt()
+    while (size >= 0) {
+      val b = new Array[Byte](size)
+      in.readFully(b)
+      val row = new UnsafeRow(nFields)
+      row.pointTo(b, size)
+      out += row
+      size = in.readInt()
+    }
+    in.close()
+  }
+
+  /** Bytes written into chunks of 256 KiB, so a growing task result is
+    * never copied whole, as a `ByteArrayOutputStream` copies it on each
+    * doubling, and no chunk is a G1 humongous object (half a region: 512 KiB
+    * at the smallest), which takes whole regions. */
+  private final class ChunkedBytes extends OutputStream {
+    private val full = ArrayBuffer.empty[Array[Byte]]
+    private var chunk = new Array[Byte](1 << 18)
+    private var pos = 0
+
+    def size: Long = full.length.toLong * chunk.length + pos
+
+    /** The bytes written, the last chunk trimmed. */
+    def chunks: Array[Array[Byte]] = (full :+ java.util.Arrays.copyOf(chunk, pos)).toArray
+
+    override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      var o = off
+      while (o < off + len) {
+        if (pos == chunk.length) { full += chunk; chunk = new Array[Byte](chunk.length); pos = 0 }
+        val n = math.min(off + len - o, chunk.length - pos)
+        System.arraycopy(b, o, chunk, pos, n)
+        pos += n
+        o += n
+      }
     }
   }
 }

@@ -23,11 +23,13 @@ object Clip {
            keepGeomType: Boolean = false, maxMaskRows: Long = 100000L): DataFrame = {
     // the mask is dissolved on the driver, so its collect is bounded: one
     // job that stops once the mask passes `maxMaskRows` (negative: no cap)
-    // instead of letting an over-cap mask OOM the driver
+    // or the bytes one collect may ship, instead of letting an over-cap
+    // mask OOM the driver
     val maskRows = BroadcastIndex.collectUpTo(mask.select(col(maskGeom)).na.drop(),
       if (maxMaskRows < 0) Long.MaxValue else maxMaskRows)
     require(maskRows.isDefined,
-      s"Clip mask exceeds $maxMaskRows rows; a clip mask is a small geometry " +
+      s"Clip mask exceeds $maxMaskRows rows or the compressed bytes one collect may ship " +
+      s"(spark.driver.maxResultSize / (spark.resultGetter.threads + 2)); a clip mask is a small geometry " +
       s"set unioned on the driver — dissolve it first or use overlay() for " +
       s"frame-vs-frame intersection at scale")
     val maskGeoms = maskRows.get.map(_.getBinary(0))

@@ -202,13 +202,17 @@ object SpatialJoin {
       val outerSide = if (outerIsLeft) lo else ro
       val pairs = attrFilter(join(lo, ro, "inner"))
       val otherCols = pairs.columns.filter(c => !outerSide.columns.contains(c))
-      val matches = pairs.select((Seq(col(idc)) ++ otherCols.map(col)): _*)
+      val matches = pairs.select((Seq(col(idc)) ++ otherCols.map(named)): _*)
       val reattached =
         if (outerIsLeft) outerSide.join(matches, Seq(idc), "left")
         else matches.join(outerSide, Seq(idc), "right")
       reattached.drop(idc)
     }
   }
+
+  /** The column of that exact name: `col` would read a dotted name as a
+    * field path. */
+  private def named(c: String): Column = col("`" + c.replace("`", "``") + "`")
 
   // -------------------------------------------------------------------------
   // Broadcast strategy
@@ -223,7 +227,8 @@ object SpatialJoin {
     val (stream, streamGeom) = if (buildRight) (l2, leftGeom) else (r2, rightGeom)
     val joined = BroadcastProbe.join(stream, streamGeom, index,
       BroadcastProbe.Predicate(predicate, buildRight, distance), outer = how != "inner")
-    if (buildRight) joined else joined.select((l2.columns ++ r2.columns).toSeq.map(col): _*)
+    if (buildRight) joined
+    else joined.select((l2.columns ++ r2.columns).toSeq.map(named): _*)
   }
 
   // -------------------------------------------------------------------------
@@ -392,11 +397,11 @@ object SpatialJoin {
       case "inner" => pairs.drop("__graft_lid", "__graft_rid")
       case "left" =>
         val rightCols = pairs.columns.filter(c => !lw.columns.contains(c))
-        val matches = pairs.select((Seq(col("__graft_lid")) ++ rightCols.map(col)): _*)
+        val matches = pairs.select((Seq(col("__graft_lid")) ++ rightCols.map(named)): _*)
         lw.join(matches, Seq("__graft_lid"), "left").drop("__graft_lid", "__graft_rid")
       case "right" =>
         val leftCols = pairs.columns.filter(c => !rw.columns.contains(c))
-        val matches = pairs.select((Seq(col("__graft_rid")) ++ leftCols.map(col)): _*)
+        val matches = pairs.select((Seq(col("__graft_rid")) ++ leftCols.map(named)): _*)
         matches.join(rw, Seq("__graft_rid"), "right").drop("__graft_lid", "__graft_rid")
     }
   }

@@ -38,7 +38,7 @@ object StreamingGeo {
       if (broadcastThreshold < 0) Long.MaxValue else broadcastThreshold)
     require(index.isDefined,
       s"sjoinAgainstStatic broadcasts the static layer, which exceeds " +
-      s"$broadcastThreshold rows; repartition-and-join the stream against " +
+      s"$broadcastThreshold rows or the compressed bytes one collect may ship; repartition-and-join the stream against " +
       s"it in batch, or raise broadcastThreshold if the driver can hold it")
     BroadcastProbe.join(stream, streamGeom, index.get, BroadcastProbe.Predicate(predicate, buildIsRight = true, 0.0),
       keepUnmatched).drop(staticGeom)

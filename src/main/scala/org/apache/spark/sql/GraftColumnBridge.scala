@@ -23,4 +23,10 @@ object GraftColumnBridge {
                      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
                      schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** The codec `spark.io.compression.codec` names (the bridge to the
+    * private[spark] `CompressionCodec.createCodec`) — used to ship collected
+    * rows compressed, as `SparkPlan.executeCollect` does. */
+  def compressionCodec(conf: org.apache.spark.SparkConf): org.apache.spark.io.CompressionCodec =
+    org.apache.spark.io.CompressionCodec.createCodec(conf)
 }

@@ -2,8 +2,9 @@ package graft
 
 import graft.api.GeoDataFrame
 import graft.geom.{GeomOps, Wkb}
-import graft.join.{Clip, Overlay, SJoinNearest, SpatialJoin}
+import graft.join.{BroadcastIndex, Clip, Overlay, SJoinNearest, SpatialJoin}
 import graft.streaming.StreamingGeo
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -117,11 +118,37 @@ class BroadcastBuildSpec extends AnyFunSuite {
     assert(staticJobs == 1, s"$staticJobs jobs")
   }
 
+  test("a side past the byte budget takes the grid path after one job, however few rows its partitions hold") {
+    // 4 partitions of 10 rows of about 1 KiB of hash bytes each, which no
+    // codec shrinks: about 10 KiB per task, 40 KiB in all
+    val hashes = (0 until 16).map(k => unhex(sha2(concat(col("id").cast("string"), lit(s"/$k")), 512)))
+    val side = spark.range(0, 40, 1, 4).select(col("id"), concat(hashes: _*).as("b"))
+    assert(side.rdd.getNumPartitions == 4)
+    val (all, jobs) = jobsDuring(BroadcastIndex.collectUpTo(side, 1000L, 1L << 20))
+    assert(jobs == 1, s"$jobs jobs")
+    assert(all.get.map(r => (r.getLong(0), r.getBinary(1).toSeq)).sortBy(_._1).toSeq ==
+      side.collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSeq)
+    // every task fits 20 KiB, their total does not; no task fits 5 KiB
+    for (budget <- Seq(20L << 10, 5L << 10)) {
+      val (none, overJobs) = jobsDuring(BroadcastIndex.collectUpTo(side, 1000L, budget))
+      assert(none.isEmpty && overJobs == 1, s"budget $budget: $overJobs jobs")
+    }
+  }
+
+  test("the byte budget leaves room below maxResultSize for the results Spark checks before the handler") {
+    val conf = new SparkConf().set("spark.driver.maxResultSize", "6m").set("spark.resultGetter.threads", "4")
+    assert(BroadcastIndex.resultBudget(conf) == (1L << 20))
+    assert(BroadcastIndex.resultBudget(new SparkConf()) == (1L << 30) / 6)
+    assert(BroadcastIndex.resultBudget(conf.set("spark.driver.maxResultSize", "0")) == Long.MaxValue)
+  }
+
   test("sjoin lists the left frame's columns first whichever side the broadcast builds") {
     // inner: threshold 7 builds the right side, threshold 6 fails the
-    // right side (7 boxes) and builds the left (5 points), -1 is the grid
-    val left = points((1, 1), (3.5, 3.5), (11, 11), (30, 30), (21, 1))
+    // right side (7 boxes) and builds the left (5 points), -1 is the grid;
+    // a dotted name is one column, not a field path
+    val left = points((1, 1), (3.5, 3.5), (11, 11), (30, 30), (21, 1)).withColumnRenamed("pid", "p.id")
     val right = boxes("id", polyBoxes :+ ((40.0, 40.0, 41.0, 41.0)) :+ ((0.0, 0.0, 1.0, 1.0)): _*)
+      .withColumnRenamed("id_tag", "id.tag")
     def sj(how: String, t: Long) = SpatialJoin.sjoin(left, right, how = how, broadcastThreshold = t)
     for ((how, paths) <- Seq("inner" -> Seq(7L, 6L), "left" -> Seq(7L), "right" -> Seq(5L))) {
       val grid = sj(how, -1L)
@@ -133,7 +160,7 @@ class BroadcastBuildSpec extends AnyFunSuite {
         assert(rowsOf(b) == rowsOf(grid), s"$how at $t")
       }
     }
-    assert(sj("inner", 6L).columns.toSeq == Seq("pid", "geometry", "id", "id_tag"))
-    assert(sj("right", 5L).columns.toSeq == Seq("pid", "id", "id_tag", "geometry"))
+    assert(sj("inner", 6L).columns.toSeq == Seq("p.id", "geometry", "id", "id.tag"))
+    assert(sj("right", 5L).columns.toSeq == Seq("p.id", "id", "id.tag", "geometry"))
   }
 }

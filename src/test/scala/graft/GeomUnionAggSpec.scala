@@ -134,13 +134,16 @@ class GeomUnionAggSpec extends AnyFunSuite {
   test("unionAll recovers from the TopologyException UnaryUnion throws on overlay-cut pieces") {
     // 55 pieces of one dissolve group that perfbench's overlay_dissolve cut
     // (seed 201, 5 600 left polygons); JTS UnaryUnion fails on them with
-    // "Ring edge missing" even after its own snapping fallbacks
+    // "Ring edge missing" even after its own snapping fallbacks, and so does
+    // OverlayNGRobust after its snap-rounding one: only unionAll's retry on
+    // the safe-scale grid unions them
     val reader = new WKBReader()
     val pieces: Seq[Geometry] = scala.io.Source.fromInputStream(
       getClass.getResourceAsStream("/fixtures/union_ring_edge_missing.wkbhex"))
       .getLines().filter(_.nonEmpty).map(h => reader.read(WKBReader.hexToBytes(h))).toSeq
     assert(pieces.size == 55)
     intercept[TopologyException](UnaryUnionOp.union(pieces.asJava))
+    intercept[TopologyException](OverlayNGRobust.union(Wkb.factory.buildGeometry(pieces.asJava)))
     val u = GeomOps.unionAll(pieces)
     assert(u.isValid)
     assert(u.getArea <= pieces.map(_.getArea).sum)
