@@ -395,8 +395,8 @@ where distinct sigs << rows) sits far below it.
         // constructed-box intersects/contains over the full lineitem scan,
         // fused by GeomSimplify to interval kernels (PLANS.md dump) — the
         // telemetry-bbox shape at 100 TB. Compare with the "wkb path" row:
-        // same predicates, boxes built via the UDF constructor the rule
-        // cannot see, so every row pays WKB write+parse+JTS.
+        // same predicates over boxes fenced from the rule, so every row
+        // pays WKB write+parse+JTS.
         val l = replicate(spark.read.parquet(s"$sf/lineitem.parquet"), mult, Seq("l_orderkey"))
         val withBoxes = l
           .withColumn("box_a", st_makebox((col("l_partkey") % 50).cast("double"),
@@ -412,14 +412,15 @@ where distinct sigs << rows) sits far below it.
       }
       bench("box predicates wkb path", mult) {
         val l = replicate(spark.read.parquet(s"$sf/lineitem.parquet"), mult, Seq("l_orderkey"))
-        val mk = graft.functions.GeoFunctions.stMakeBoxU
-        val withBoxes = l
-          .withColumn("box_a", mk((col("l_partkey") % 50).cast("double"),
+        // fenced, so GeomSimplify cannot fuse the predicates over the
+        // constructed boxes: every row pays WKB write + parse
+        val withBoxes = graft.plans.Fence(l
+          .withColumn("box_a", st_makebox((col("l_partkey") % 50).cast("double"),
             (col("l_suppkey") % 50).cast("double"),
             (col("l_partkey") % 50 + 2).cast("double"), (col("l_suppkey") % 50 + 3).cast("double")))
-          .withColumn("box_b", mk((col("l_partkey") * 3 % 50).cast("double"),
+          .withColumn("box_b", st_makebox((col("l_partkey") * 3 % 50).cast("double"),
             (col("l_suppkey") * 5 % 50).cast("double"),
-            (col("l_partkey") * 3 % 50 + 1).cast("double"), (col("l_suppkey") * 5 % 50 + 4).cast("double")))
+            (col("l_partkey") * 3 % 50 + 1).cast("double"), (col("l_suppkey") * 5 % 50 + 4).cast("double"))))
         val r = withBoxes.select(
           st_intersects(col("box_a"), col("box_b")).as("i"),
           st_contains(col("box_a"), col("box_b")).as("c"))
@@ -440,12 +441,12 @@ where distinct sigs << rows) sits far below it.
           .st_total_bounds_agg(col("geometry"))).fullCount, 0L)
       }
       bench("total bounds wkb agg", mult) {
-        // same aggregate, points built via the UDF constructor the rule
-        // cannot see: every row pays WKB write + parse + envelope fold
+        // same aggregate over points fenced from the rule: every row pays
+        // WKB write + parse + envelope fold
         val l = replicate(spark.read.parquet(s"$sf/lineitem.parquet"), mult, Seq("l_orderkey"))
-        val g = l.withColumn("geometry", graft.functions.GeoFunctions.stPointU(
+        val g = graft.plans.Fence(l.withColumn("geometry", st_point(
           (col("l_partkey") * 7 % 1000).cast("double") / 10.0,
-          (col("l_suppkey") * 13 % 1000).cast("double") / 10.0))
+          (col("l_suppkey") * 13 % 1000).cast("double") / 10.0)))
         (g.agg(graft.agg.GeoAggregates
           .st_total_bounds_agg(col("geometry"))).fullCount, 0L)
       }

@@ -497,7 +497,7 @@ object SparkEntry {
       val sl = supLines(s, d)
         .withColumn("mx", (col("x1") + col("x2")) / 2.0)
         .withColumn("my", (col("y1") + col("y2")) / 2.0)
-        .withColumn("line3", stLineFromCoordsU(array(col("x1"), col("mx"), col("x2")), array(col("y1"), col("my"), col("y2"))))
+        .withColumn("line3", st_line_from_coords(array(col("x1"), col("mx"), col("x2")), array(col("y1"), col("my"), col("y2"))))
       sl.filter(!(col("x1") === col("x2") && col("y1") === col("y2")))
         .select(col("s_suppkey"), st_npoints(st_simplify(col("line3"), lit(0.0001), lit(false))).as("np"))
     }),
@@ -531,11 +531,11 @@ object SparkEntry {
       .select(col("l_orderkey"), col("l_linenumber"), round(st_area(col("box_a")), 6).as("clip_area"))),
     "q41_segmentize" -> ((s, d) => supLines(s, d)
       .filter(!(col("x1") === col("x2") && col("y1") === col("y2")))
-      .select(col("s_suppkey"), st_npoints(stSegmentizeU(col("line"), lit(4.0))).as("np"))),
+      .select(col("s_suppkey"), st_npoints(st_segmentize(col("line"), lit(4.0))).as("np"))),
     "q42_bounding_radius" -> ((s, d) => boxes(s, d)
       .filter(col("l_orderkey") % 50 === 1)
       .select(col("l_orderkey"), col("l_linenumber"),
-        round(stMinBoundingRadiusU(col("box_a")), 6).as("radius"))),
+        round(st_minimum_bounding_radius(col("box_a")), 6).as("radius"))),
     "q43_rotated_rect" -> ((s, d) => boxes(s, d)
       .filter(col("l_orderkey") % 50 === 2)
       .select(col("l_orderkey"), col("l_linenumber"),
@@ -551,7 +551,7 @@ object SparkEntry {
         st_makebox(lit(5.0), lit(5.0), lit(5.0), lit(5.0)).as("box_a"))
       base.unionByName(degen)
         .select(col("l_orderkey"), col("l_linenumber"),
-          round(stLengthU(st_boundary(col("box_a"))), 6).as("blen"))
+          round(st_length(st_boundary(col("box_a"))), 6).as("blen"))
     }),
     "q87_interior_rings" -> ((s, d) => {
       // count_interior_rings (ref base.py:629): even orderkeys get a 0.5x0.5
@@ -586,7 +586,7 @@ object SparkEntry {
       .filter(col("l_orderkey") % 100 === 1)
       .withColumn("pa", st_point(col("ax0"), col("ay0")))
       .withColumn("pb", st_point(col("bx0"), col("by0")))
-      .withColumn("snapped", stSnapU(col("pa"), col("pb"), lit(3.0)))
+      .withColumn("snapped", st_snap(col("pa"), col("pb"), lit(3.0)))
       .select(col("l_orderkey"), col("l_linenumber"),
         st_x(col("snapped")).as("sx"), st_y(col("snapped")).as("sy"))),
     "q51_more_predicates" -> ((s, d) => boxes(s, d)
@@ -1085,7 +1085,7 @@ object SparkEntry {
           "transform(sequence(0, (k+1)*k - 1), h -> concat('(', h % k, ' ', h div k, ', ', h % k + 1, ' ', h div k, ')')), " +
           "transform(sequence(0, (k+1)*k - 1), v -> concat('(', v div k, ' ', v % k, ', ', v div k, ' ', v % k + 1, ')')))")
       n.withColumn("mls", concat(lit("MULTILINESTRING ("), array_join(segs, ", "), lit(")")))
-        .withColumn("faces", stPolygonizeU(st_parts(st_geomfromwkt(col("mls")))))
+        .withColumn("faces", st_polygonize(st_parts(st_geomfromwkt(col("mls")))))
         .select(col("n_nationkey"), st_ngeometries(col("faces")).as("n_faces"),
           round(st_area(col("faces")), 6).as("total_area"))
     }),
@@ -1113,7 +1113,7 @@ object SparkEntry {
         .withColumn("k", (col("n_nationkey") % 3 + 2).cast("int"))
         .withColumn("mp", expr(
           "concat('MULTIPOINT (', array_join(transform(sequence(0, k*k - 1), i -> concat('(', i % k, ' ', i div k, ')')), ', '), ')')"))
-      n.withColumn("tri", stDelaunayU(st_geomfromwkt(col("mp")), lit(0.0), lit(false)))
+      n.withColumn("tri", st_delaunay_triangles(st_geomfromwkt(col("mp")), lit(0.0), lit(false)))
         .select(col("n_nationkey"), st_ngeometries(col("tri")).as("n_tri"),
           round(st_area(col("tri")), 6).as("area"))
     }),
@@ -1136,7 +1136,7 @@ object SparkEntry {
         .withColumn("m", (col("n_nationkey") % 2 + 2).cast("int"))
         .withColumn("sites", expr(
           "concat('MULTIPOINT (', array_join(transform(sequence(0, m*m - 1), i -> concat('(', 2*(i % m) + 1, ' ', 2*(i div m) + 1, ')')), ', '), ')')"))
-        .withColumn("vor", stVoronoiExtendU(st_geomfromwkt(col("sites")), lit(0.0), lit(false),
+        .withColumn("vor", st_voronoi(st_geomfromwkt(col("sites")), lit(0.0), lit(false),
           st_makebox(lit(0.0), lit(0.0), (col("m") * 2).cast("double"), (col("m") * 2).cast("double"))))
       n.select(col("n_nationkey"), explode(st_parts(col("vor"))).as("cell"))
         .select(col("n_nationkey"), st_area(col("cell")).as("ca"))
@@ -1151,7 +1151,7 @@ object SparkEntry {
       // exact, not tolerance-dependent)
       val n = s.read.parquet(s"$d/nation.parquet")
         .withColumn("sq", (col("n_nationkey") % 5 + 1).cast("double"))
-        .withColumn("mic", stMaxInscribedCircleU(
+        .withColumn("mic", st_maximum_inscribed_circle(
           st_makebox(lit(0.0), lit(0.0), col("sq"), col("sq")), lit(1e-7)))
       // a named column: the interpolated center point feeds cx AND cy
       n.withColumn("__ctr", st_interpolate(col("mic"), lit(0.0), lit(false)))
@@ -1169,8 +1169,8 @@ object SparkEntry {
         .withColumn("h", (col("n_nationkey") % 2 + 1).cast("double"))
         .withColumn("g", st_makebox(lit(0.0), lit(0.0), col("w"), col("h")))
       n.select(col("n_nationkey"),
-        round(stMinClearanceU(col("g")), 6).as("clearance"),
-        round(st_length(stMinClearanceLineU(col("g"))), 6).as("line_len"))
+        round(st_minimum_clearance(col("g")), 6).as("clearance"),
+        round(st_length(st_minimum_clearance_line(col("g"))), 6).as("line_len"))
     }),
     "q95_build_area" -> ((s, d) => {
       // ref base.py:6632 (build_area): outer ring box(0,0,4sc,4sc) + inner
@@ -1181,7 +1181,7 @@ object SparkEntry {
         .withColumn("gc", expr(
           "concat('GEOMETRYCOLLECTION (LINESTRING (0 0, 0 ', 4*sc, ', ', 4*sc, ' ', 4*sc, ', ', 4*sc, ' 0, 0 0), " +
             "LINESTRING (', sc, ' ', sc, ', ', sc, ' ', 2*sc, ', ', 2*sc, ' ', 2*sc, ', ', 2*sc, ' ', sc, ', ', sc, ' ', sc, '))')"))
-        .withColumn("ba", stBuildAreaU(st_geomfromwkt(col("gc"))))
+        .withColumn("ba", st_build_area(st_geomfromwkt(col("gc"))))
       n.select(col("n_nationkey"), round(st_area(col("ba")), 6).as("area"),
         st_n_interior_rings(col("ba")).as("n_holes"))
     }),
@@ -1209,7 +1209,7 @@ object SparkEntry {
         .withColumn("pt", st_point(col("px").cast("double"), col("py").cast("double")))
         .withColumn("seg", st_makeline(st_point(lit(0.0), lit(2.0)), st_point(lit(10.0), lit(2.0))))
       n.select(col("n_nationkey"),
-        st_astext(stShortestLineU(col("pt"), col("seg"))).as("short_wkt"),
+        st_astext(st_shortest_line(col("pt"), col("seg"))).as("short_wkt"),
         round(st_project(col("seg"), col("pt"), lit(false)), 6).as("proj"),
         round(st_project(col("seg"), col("pt"), lit(true)), 6).as("proj_n"))
     }),
@@ -1248,8 +1248,8 @@ object SparkEntry {
       n.select(col("n_nationkey"),
         st_astext(st_exterior(st_makebox(col("a").cast("double"), col("b").cast("double"),
           col("c").cast("double"), col("e").cast("double")))).as("exterior_wkt"),
-        st_astext(stExtractUniquePointsU(st_geomfromwkt(col("dupline")))).as("unique_wkt"),
-        st_astext(stRemoveRepeatedU(st_geomfromwkt(col("dupline")), lit(0.0))).as("dedup_wkt"),
+        st_astext(st_extract_unique_points(st_geomfromwkt(col("dupline")))).as("unique_wkt"),
+        st_astext(st_remove_repeated_points(st_geomfromwkt(col("dupline")), lit(0.0))).as("dedup_wkt"),
         st_astext(st_force_2d(st_point_z(col("a").cast("double"), col("b").cast("double"), lit(9.0)))).as("flat_wkt"))
     }),
     "q100_linemerge_geomn" -> ((s, d) => {
@@ -1268,8 +1268,8 @@ object SparkEntry {
         .withColumn("mp", expr(
           "concat('MULTIPOINT ((', a, ' ', b, '), (', c, ' ', b, '), (', c, ' ', e, '))')"))
       n.select(col("n_nationkey"),
-        st_astext(stLineMergeU(st_geomfromwkt(col("mlsf")))).as("merged_wkt"),
-        st_ngeometries(stLineMergeU(st_geomfromwkt(col("mlsf")))).as("n_merged"),
+        st_astext(st_line_merge(st_geomfromwkt(col("mlsf")))).as("merged_wkt"),
+        st_ngeometries(st_line_merge(st_geomfromwkt(col("mlsf")))).as("n_merged"),
         st_ngeometries(st_line_merge_directed(st_geomfromwkt(col("mlsr")))).as("n_directed"),
         st_astext(st_geometry_n(st_geomfromwkt(col("mp")), lit(1))).as("geomn_wkt"))
     }),
@@ -1288,7 +1288,7 @@ object SparkEntry {
       n.select(col("n_nationkey"),
         st_astext(st_offset_curve(col("seg"), col("dd").cast("double"), lit(8), lit(1), lit(5.0))).as("off_pos_wkt"),
         st_astext(st_offset_curve(col("seg"), -col("dd").cast("double"), lit(8), lit(1), lit(5.0))).as("off_neg_wkt"),
-        st_astext(stSetPrecisionU(st_point(col("n_nationkey").cast("double") + lit(0.25),
+        st_astext(st_set_precision(st_point(col("n_nationkey").cast("double") + lit(0.25),
           col("n_nationkey").cast("double") + lit(0.75)), lit(0.5))).as("prec_wkt"))
     }),
     "q102_mbc_concave_repr" -> ((s, d) => {

@@ -367,9 +367,9 @@ case class StDisjoint(left: Expression, right: Expression) extends GeomBinaryPre
 }
 
 // The remaining JTS binary predicates whose truth implies bbox overlap —
-// native (codegen'd) twins of the UDFs so they stay inside whole-stage
-// codegen AND are pattern-matchable by plans.AutoSpatialJoin, which turns a
-// plain `a.join(b, st_touches(...))` spelling into the grid candidate join.
+// native classes so they are pattern-matchable by plans.AutoSpatialJoin,
+// which turns a plain `a.join(b, st_touches(...))` spelling into the grid
+// candidate join.
 
 case class StTouches(left: Expression, right: Expression) extends GeomBinaryPredicate {
   def kernelName = "touches"

@@ -59,7 +59,7 @@ object GeoJsonIO {
       lines.select(col("value")).as(org.apache.spark.sql.Encoders.STRING)).schema
     val parsed = lines
       .withColumn("__f", from_json(col("value"), featureSchema))
-      .withColumn("geometry", stGeomFromGeoJsonU(col("value")))
+      .withColumn("geometry", st_geomfromgeojson(col("value")))
     val hasProps = featureSchema.fields.exists(f => f.name == "properties" &&
       f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType])
     val flat =
@@ -224,7 +224,7 @@ object GeoJsonIO {
     val propsJson = to_json(struct(dataCols.map(col): _*))
     gdf.df.select(concat(
       lit("""{"type":"Feature","properties":"""), propsJson,
-      lit(""","geometry":"""), stAsGeoJsonU(col(g)), lit("}")).as("value"))
+      lit(""","geometry":"""), st_asgeojson(col(g)), lit("}")).as("value"))
   }
 
   /** Write as newline-delimited GeoJSON features (the scalable form).

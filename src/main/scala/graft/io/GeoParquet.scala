@@ -96,7 +96,7 @@ object GeoParquet {
     val stats = gdf.df
       .select(st_bounds(col(g)).as("__b"),
         // spec geometry_types entries carry a " Z" suffix for 3D
-        concat(stGeometryTypeU(col(g)),
+        concat(st_geometrytype(col(g)),
           when(st_hasz(col(g)), lit(" Z")).otherwise(lit(""))).as("__t"))
       .agg(min("__b.xmin"), min("__b.ymin"), max("__b.xmax"), max("__b.ymax"),
         sort_array(collect_set(col("__t"))))
@@ -134,7 +134,7 @@ object GeoParquet {
             s"column '$g' to derive it from; cannot append without mislabeling the union")
         val st = stored
           .select(st_bounds(col(g)).as("__b"),
-            concat(stGeometryTypeU(col(g)),
+            concat(st_geometrytype(col(g)),
               when(st_hasz(col(g)), lit(" Z")).otherwise(lit(""))).as("__t"))
           .agg(min("__b.xmin"), min("__b.ymin"), max("__b.xmax"), max("__b.ymax"),
             sort_array(collect_set(col("__t"))))

@@ -1,9 +1,11 @@
 package graft.io
 
 import graft.api.GeoDataFrame
+import graft.functions.GeoFunctions
 import graft.geom.Wkb
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.locationtech.jts.geom.Geometry
 
 /** PostGIS interchange (reference `io/sql.py:126-463`): JDBC plumbing plus
   * the hex-EWKB geometry codec PostGIS speaks.
@@ -23,44 +25,32 @@ object PostgisIO {
 
   // ------------------------------------------------------------- the codec
 
-  /** Decode a PostGIS hex-EWKB string column to the engine's WKB
-    * (ref `io/sql.py:46-125` `_df_to_geodf`'s shapely round-trip). */
-  val decodeHexEwkbU = udf((hex: String) =>
-    if (hex == null) null
-    else Wkb.write(Wkb.read(hexToBytes(hex))))
+  /** Decode a PostGIS hex-EWKB string to the engine's WKB (ref
+    * `io/sql.py:46-125` `_df_to_geodf`'s shapely round-trip). */
+  def decodeHexEwkb(hex: String): Array[Byte] = Wkb.write(Wkb.read(hexToBytes(hex)))
 
   /** SRID embedded in a hex-EWKB string (0 when absent). */
-  val ewkbSridU = udf((hex: String) =>
-    if (hex == null) None
-    else {
-      val b = hexToBytes(hex)
-      val littleEndian = b(0) == 1
-      def i32(off: Int): Int = {
-        val bb = java.nio.ByteBuffer.wrap(b, off, 4)
-        bb.order(if (littleEndian) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-        bb.getInt
-      }
-      val typeWord = i32(1)
-      if ((typeWord & 0x20000000) != 0) Some(i32(5)) else Some(0)
-    })
+  def ewkbSrid(hex: String): Int = {
+    val b = hexToBytes(hex)
+    val bb = java.nio.ByteBuffer.wrap(b)
+    bb.order(if (b(0) == 1) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+    if ((bb.getInt(1) & 0x20000000) != 0) bb.getInt(5) else 0
+  }
 
-  /** Encode the engine's WKB as hex-EWKB with the given SRID — what
-    * `to_postgis` writes (ref `io/sql.py:300-315`). */
-  val encodeHexEwkbU = udf((wkb: Array[Byte], srid: Int) =>
-    if (wkb == null) null
-    else {
-      val g = Wkb.read(wkb)
-      g.setSRID(srid)
-      val dim = if (Wkb.hasZ(g)) 3 else 2
-      // PostGIS canonical form is little-endian (NDR)
-      val w = new org.locationtech.jts.io.WKBWriter(dim,
-        org.locationtech.jts.io.ByteOrderValues.LITTLE_ENDIAN, true)
-      bytesToHex(w.write(g))
-    })
+  /** Encode a geometry as hex-EWKB with the given SRID — what `to_postgis`
+    * writes (ref `io/sql.py:300-315`). */
+  def encodeHexEwkb(g: Geometry, srid: Int): String = {
+    g.setSRID(srid)
+    val dim = if (Wkb.hasZ(g)) 3 else 2
+    // PostGIS canonical form is little-endian (NDR)
+    val w = new org.locationtech.jts.io.WKBWriter(dim,
+      org.locationtech.jts.io.ByteOrderValues.LITTLE_ENDIAN, true)
+    bytesToHex(w.write(g))
+  }
 
-  def decode_hex_ewkb(c: Column): Column = decodeHexEwkbU(c)
-  def ewkb_srid(c: Column): Column = ewkbSridU(c)
-  def encode_hex_ewkb(c: Column, srid: Column): Column = encodeHexEwkbU(c, srid)
+  def decode_hex_ewkb(c: Column): Column = GeoFunctions.call("ewkb_decode_hex", c)
+  def ewkb_srid(c: Column): Column = GeoFunctions.call("ewkb_srid", c)
+  def encode_hex_ewkb(c: Column, srid: Column): Column = GeoFunctions.call("ewkb_encode_hex", c, srid)
 
   // ------------------------------------------------------------ JDBC paths
 
@@ -73,7 +63,7 @@ object PostgisIO {
     // alias must not start with '_' — legal in PostgreSQL but rejected by
     // stricter engines (caught against embedded Derby)
     val df = spark.read.jdbc(url, s"($query) AS graft_subq", properties)
-    val decoded = df.withColumn("geometry", decodeHexEwkbU(col(geomCol).cast("string")))
+    val decoded = df.withColumn("geometry", decode_hex_ewkb(col(geomCol).cast("string")))
       .drop(geomCol)
     GeoDataFrame(decoded, "geometry", crs.map(c => Map("geometry" -> c)).getOrElse(Map.empty))
   }
@@ -89,7 +79,7 @@ object PostgisIO {
                 properties: java.util.Properties = new java.util.Properties(),
                 mode: String = "error"): Unit = {
     val out = gdf.df.withColumn(gdf.geometryCol,
-      encodeHexEwkbU(col(gdf.geometryCol), lit(srid)))
+      encode_hex_ewkb(col(gdf.geometryCol), lit(srid)))
     out.write.mode(mode).jdbc(url, table, withPgStringtype(url, properties))
   }
 

@@ -92,11 +92,19 @@ object Clip {
     clipWith(df, clipU, geom, keepGeomType)
   }
 
+  /** With `keepGeomType`, each clipped row keeps only the parts of its own
+    * input geometry's family (point, line or polygon), as `Overlay` does. */
   private def clipWith(df: DataFrame, clipU: UserDefinedFunction, geom: String,
                        keepGeomType: Boolean): DataFrame = {
-    val clipped = Fence(df.withColumn(geom, clipU(col(geom)))).filter(col(geom).isNotNull)
-    if (!keepGeomType) clipped else finish(clipped, geom, keepGeomType = true)
+    val input = if (keepGeomType) df.withColumn(DimCol, st_dimension(col(geom))) else df
+    val clipped = Fence(input.withColumn(geom, clipU(col(geom)))).filter(col(geom).isNotNull)
+    if (!keepGeomType) clipped
+    else Fence(clipped.withColumn(geom, st_collection_extract(col(geom), col(DimCol))).drop(DimCol))
+      .filter(!st_isempty(col(geom)))
   }
+
+  /** The private column that carries each input row's geometry dimension. */
+  private val DimCol = "__graft_dim"
 
   /** Per-executor cache of the prepared broadcast mask geometry (the clip
     * mask is a plan literal; preparing it once per JVM mirrors the
@@ -109,19 +117,5 @@ object Clip {
     private val cache = new java.util.concurrent.ConcurrentHashMap[java.math.BigInteger, Entry]()
     def get(wkb: Array[Byte]): Entry =
       cache.computeIfAbsent(new java.math.BigInteger(wkb), (_: java.math.BigInteger) => new Entry(Wkb.read(wkb)))
-  }
-
-  private val keepTypeU = udf((b: Array[Byte], dim: Int) =>
-    if (b == null) null else Wkb.write(GeomOps.collectionExtract(Wkb.read(b), dim)))
-  private val dimU = udf((b: Array[Byte]) => if (b == null) None else Some(Wkb.read(b).getDimension))
-
-  private def finish(clipped: DataFrame, geom: String, keepGeomType: Boolean): DataFrame = {
-    val nonEmpty = clipped.filter(col(geom).isNotNull && !st_isempty(col(geom)))
-    if (!keepGeomType) nonEmpty
-    else {
-      val dim = clipped.select(dimU(col(geom)).as("__d")).filter(col("__d").isNotNull)
-        .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(2)
-      Fence(nonEmpty.withColumn(geom, keepTypeU(col(geom), lit(dim)))).filter(!st_isempty(col(geom)))
-    }
   }
 }

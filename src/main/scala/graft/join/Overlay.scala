@@ -24,10 +24,6 @@ object Overlay {
 
   val Hows: Set[String] = Set("intersection", "union", "identity", "symmetric_difference", "difference")
 
-  private val keepTypeU = udf((b: Array[Byte], dim: Int) =>
-    if (b == null) null else Wkb.write(GeomOps.collectionExtract(Wkb.read(b), dim)))
-  private val dimU = udf((b: Array[Byte]) => if (b == null) None else Some(Wkb.read(b).getDimension))
-
   /** With `keepGeomType`, each result row keeps only the parts of the
     * geometry family (point, line or polygon) that GeoPandas would keep. A
     * row that comes from `df1` keeps the family of its own `df1` geometry as
@@ -44,7 +40,7 @@ object Overlay {
     require(Hows.contains(how), s"how must be one of $Hows")
     // make_valid preprocessing (ref overlay.py:329-364), after each df1 row
     // has noted its geometry's dimension
-    val a = (if (keepGeomType) df1.withColumn(DimCol, dimU(col(geom1))) else df1)
+    val a = (if (keepGeomType) df1.withColumn(DimCol, st_dimension(col(geom1))) else df1)
       .withColumn(geom1, st_make_valid(col(geom1)))
     val b = df2.withColumn(geom2, st_make_valid(col(geom2)))
     // every join of this call shares what its broadcast builds learn, so a
@@ -68,11 +64,11 @@ object Overlay {
       val dim =
         if (how == "union" || how == "symmetric_difference") {
           // fenced so the null filter does not decode the row's geometry again
-          val first = Fence(df1.select(dimU(col(geom1)).as(DimCol))).filter(col(DimCol).isNotNull)
+          val first = Fence(df1.select(st_dimension(col(geom1)).as(DimCol))).filter(col(DimCol).isNotNull)
             .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(2)
           coalesce(col(DimCol), lit(first))
         } else col(DimCol)
-      Fence(nonEmpty.withColumn(geom1, keepTypeU(col(geom1), dim)).drop(DimCol))
+      Fence(nonEmpty.withColumn(geom1, st_collection_extract(col(geom1), dim)).drop(DimCol))
         .filter(!st_isempty(col(geom1)))
     } else nonEmpty
   }

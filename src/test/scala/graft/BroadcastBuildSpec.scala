@@ -66,6 +66,8 @@ class BroadcastBuildSpec extends AnyFunSuite {
     val (clipped, clipJobs) = jobsDuring(Clip.clip(polys, mask))
     assert(clipJobs == 1, s"clip: $clipJobs jobs")
     assert(clipped.count() == 4)
+    val (_, keepTypeJobs) = jobsDuring(Clip.clip(polys, mask, keepGeomType = true))
+    assert(keepTypeJobs == 1, s"keep-type clip: $keepTypeJobs jobs")
     for (how <- Seq("inner", "left", "right")) {
       val (joined, jobs) = jobsDuring(SpatialJoin.sjoin(probes, polys, how = how))
       assert(jobs == 1, s"$how: $jobs jobs")

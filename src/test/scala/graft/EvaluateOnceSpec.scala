@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.GeoFunctions._
+import graft.functions.expr.WkbFunction
 import graft.geom.{GeomOps, Wkb}
 import graft.join.{BroadcastProbe, Clip, Pins, SJoinNearest, SpatialJoin}
 import graft.ops.Dedup
@@ -11,10 +12,21 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPla
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Finds ScalaUDF calls that an optimized plan evaluates twice for one row. */
+/** Finds function calls that an optimized plan evaluates twice for one
+  * row: Spark UDFs, the function table's [[WkbFunction]]s and the native
+  * geometry expressions of `graft.functions.expr`. */
 object UdfOnce {
 
-  private def calls(e: Expression): Seq[Expression] = e.collect { case u: ScalaUDF => u }
+  /** The function name of a table or native geometry call. */
+  private def geomName(e: Expression): Option[String] = e match {
+    case f: WkbFunction => Some(f.name)
+    case n if n.getClass.getPackageName == "graft.functions.expr" && n.getClass.getSimpleName.startsWith("St") =>
+      Some(n.prettyName)
+    case _ => None
+  }
+
+  private def calls(e: Expression): Seq[Expression] =
+    e.collect { case c if c.isInstanceOf[ScalaUDF] || geomName(c).isDefined => c }
 
   private def evaluated(p: LogicalPlan): Seq[Expression] = p match {
     case Project(list, _) => list.flatMap(calls)
@@ -59,12 +71,12 @@ object UdfOnce {
       if (up.isEmpty) Nil else scan(upper.children.head, up)
   }.flatten
 
-  /** How many times the plan evaluates the UDF behind `c` (a column built
-    * by a `st_*` function over literals). */
+  /** How many times the plan evaluates the function `c` calls (a column
+    * built by a `st_*` function over literals), matched by name. */
   def count(plan: LogicalPlan, c: Column): Int = {
-    val fn = SparkTestBase.spark.range(1).select(c).queryExecution.analyzed
-      .expressions.flatMap(_.collect { case u: ScalaUDF => u.function }).head
-    occurrences(plan, { case u: ScalaUDF => u.function eq fn })
+    val name = SparkTestBase.spark.range(1).select(c).queryExecution.analyzed
+      .expressions.flatMap(_.collect(Function.unlift(geomName))).head
+    occurrences(plan, { case e => geomName(e).contains(name) })
   }
 
   def occurrences(plan: LogicalPlan, hit: PartialFunction[Expression, Boolean]): Int = {
@@ -81,7 +93,7 @@ class EvaluateOnceSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  /** Queries that repeat a UDF call on purpose, though never twice for one
+  /** Queries that repeat a function call on purpose, though never twice for one
     * row, so they are not findings; the sweep checks them like every other
     * query. */
   private val repeatedOnPurpose: Map[String, String] = Map(

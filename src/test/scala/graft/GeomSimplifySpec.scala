@@ -2,8 +2,27 @@ package graft
 
 import graft.functions.GeoFunctions._
 import graft.functions.expr.GeomKernel
+import graft.geom.{GeomOps, Wkb}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Reference implementations over GeomOps, as Spark UDFs with the null
+  * semantics of the engine's functions. GeomSimplify cannot see inside a
+  * UDF, so these are the unfused truth the fused paths are compared with. */
+object Unfused {
+  private def rd(b: Array[Byte]) = Wkb.read(b)
+  private def gg[T](f: (org.locationtech.jts.geom.Geometry, org.locationtech.jts.geom.Geometry) => T) =
+    (a: Array[Byte], b: Array[Byte]) => if (a == null || b == null) None else Some(f(rd(a), rd(b)))
+  val makeBox = udf((x0: Double, y0: Double, x1: Double, y1: Double) => Wkb.write(GeomOps.makeBox(x0, y0, x1, y1)))
+  val point = udf((x: Option[Double], y: Option[Double]) => for (xx <- x; yy <- y) yield Wkb.write(GeomOps.point(xx, yy)))
+  val intersects = udf(gg(GeomOps.intersects))
+  val contains = udf(gg(GeomOps.contains))
+  val within = udf(gg(GeomOps.within))
+  val disjoint = udf(gg(GeomOps.disjoint))
+  val distance = udf(gg(GeomOps.distance))
+  val area = udf((b: Array[Byte]) => if (b == null) None else Some(GeomOps.area(rd(b))))
+  val envelope = udf((b: Array[Byte]) => if (b == null) null else Wkb.write(GeomOps.envelope(rd(b))))
+}
 
 /** The constructed-point algebraic simplification rule: results bit-exact
   * vs the WKB kernel path, null semantics preserved, and the fused plan
@@ -197,8 +216,6 @@ class GeomSimplifySpec extends AnyFunSuite {
   }
 
   test("randomized differential: fused native paths == unfusable UDF paths") {
-    import graft.functions.GeoFunctions.{stMakeBoxU, stPointU, stIntersectsU, stContainsU,
-      stWithinU, stDisjointU, stAreaU, stEnvelopeU, stDistanceU}
     val rng = new scala.util.Random(20260814)
     def coord(): Double = rng.nextInt(5) match {
       case 0 => rng.nextInt(9) - 4.0
@@ -214,28 +231,28 @@ class GeomSimplifySpec extends AnyFunSuite {
       .withColumn("box_b", st_makebox(col("bx"), col("by"), col("bxx"), col("byy")))
       .withColumn("pa", st_point(col("ax"), col("ay")))
       .withColumn("pb", st_point(col("bx"), col("by")))
-      // UDF twins: the rule cannot see ScalaUDF, so these are the unfused truth
-      .withColumn("ubox_a", stMakeBoxU(col("ax"), col("ay"), col("axx"), col("ayy")))
-      .withColumn("ubox_b", stMakeBoxU(col("bx"), col("by"), col("bxx"), col("byy")))
-      .withColumn("upa", stPointU(col("ax"), col("ay")))
-      .withColumn("upb", stPointU(col("bx"), col("by")))
+      // the rule cannot see inside the Unfused UDFs: the unfused truth
+      .withColumn("ubox_a", Unfused.makeBox(col("ax"), col("ay"), col("axx"), col("ayy")))
+      .withColumn("ubox_b", Unfused.makeBox(col("bx"), col("by"), col("bxx"), col("byy")))
+      .withColumn("upa", Unfused.point(col("ax"), col("ay")))
+      .withColumn("upb", Unfused.point(col("bx"), col("by")))
     val q = df.select(col("ax"),
       st_intersects(col("box_a"), col("box_b")).as("i"),
-      stIntersectsU(col("ubox_a"), col("ubox_b")).as("ui"),
+      Unfused.intersects(col("ubox_a"), col("ubox_b")).as("ui"),
       st_contains(col("box_a"), col("box_b")).as("c"),
-      stContainsU(col("ubox_a"), col("ubox_b")).as("uc"),
+      Unfused.contains(col("ubox_a"), col("ubox_b")).as("uc"),
       st_within(col("box_a"), col("box_b")).as("w"),
-      stWithinU(col("ubox_a"), col("ubox_b")).as("uw"),
+      Unfused.within(col("ubox_a"), col("ubox_b")).as("uw"),
       st_disjoint(col("box_a"), col("box_b")).as("dj"),
-      stDisjointU(col("ubox_a"), col("ubox_b")).as("udj"),
+      Unfused.disjoint(col("ubox_a"), col("ubox_b")).as("udj"),
       st_intersects(col("box_a"), col("pb")).as("ip"),
-      stIntersectsU(col("ubox_a"), col("upb")).as("uip"),
+      Unfused.intersects(col("ubox_a"), col("upb")).as("uip"),
       st_contains(col("box_a"), col("pb")).as("cp"),
-      stContainsU(col("ubox_a"), col("upb")).as("ucp"),
+      Unfused.contains(col("ubox_a"), col("upb")).as("ucp"),
       st_area(st_envelope(col("box_a"))).as("ar"),
-      stAreaU(stEnvelopeU(col("ubox_a"))).as("uar"),
+      Unfused.area(Unfused.envelope(col("ubox_a"))).as("uar"),
       st_distance(col("pa"), col("pb")).as("d"),
-      stDistanceU(col("upa"), col("upb")).as("ud"))
+      Unfused.distance(col("upa"), col("upb")).as("ud"))
     val plan = q.queryExecution.executedPlan.toString.toLowerCase
     assert(plan.contains("stboxintersectsbox") && plan.contains("stboxcontainsbox")
       && plan.contains("hypot"), s"fusions must fire in the differential plan:\n$plan")
@@ -351,7 +368,6 @@ class GeomSimplifySpec extends AnyFunSuite {
 
   test("st_total_bounds_agg over constructed points fuses to columnar min/max, bit-exact") {
     import graft.agg.GeoAggregates.st_total_bounds_agg
-    import graft.functions.GeoFunctions.stPointU
     val dir = java.nio.file.Files.createTempDirectory("gstb").toString
     // nulls on either coordinate, NaN on one axis, ±0.0, negatives — every
     // branch of the kernel's skip/poison semantics
@@ -372,8 +388,8 @@ class GeomSimplifySpec extends AnyFunSuite {
     val plan = fused.queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("stpoint") && !plan.toLowerCase.contains("totalbounds"),
       s"constructed-point total_bounds must fuse to min/max aggregates:\n$plan")
-    // UDF twin: ScalaUDF blocks the rewrite, so this is the unfused kernel truth
-    val kernel = src.withColumn("g", stPointU(col("x"), col("y")))
+    // a UDF blocks the rewrite, so this is the unfused kernel truth
+    val kernel = src.withColumn("g", Unfused.point(col("x"), col("y")))
       .groupBy(col("grp")).agg(st_total_bounds_agg(col("g")).as("tb"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
       val s = r.getStruct(1)

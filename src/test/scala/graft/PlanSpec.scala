@@ -73,6 +73,21 @@ class PlanSpec extends AnyFunSuite {
     df.collect() // forces janino compile of the generated code — must not fall back
   }
 
+  test("table functions plan inside one whole-stage codegen stage, and its code compiles") {
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val path = writeSample()
+    val mask = lit(Wkb.write(GeomOps.makeBox(0, 0, 50, 5)))
+    val df = spark.read.parquet(path).select(st_make_valid(col("geometry")).as("v"),
+      st_bounds(col("geometry")).as("b"), st_intersection(col("geometry"), mask).as("i"))
+    val plan = df.queryExecution.executedPlan
+    val stages = plan.collect { case w: WholeStageCodegenExec => w }
+    assert(stages.size == 1 && stages.head.child.isInstanceOf[ProjectExec], plan)
+    CodeGenerator.compile(stages.head.doCodeGen()._2) // throws if the generated code does not compile
+    val rows = df.collect()
+    assert(rows.length == 1000 && rows.count(r => !Wkb.read(r.getAs[Array[Byte]]("i")).isEmpty) == 306)
+  }
+
   test("BboxFastPath rule: .cx over GeoParquet covering column reaches PushedFilters") {
     import graft.api.GeoDataFrame
     val dir = java.nio.file.Files.createTempDirectory("bboxrule").toString

@@ -449,6 +449,18 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(a.toSeq == Seq(4.0))
   }
 
+  test("clip with keepGeomType keeps each row's own family, whatever row comes first") {
+    // the first row touches the mask along its edge, so its clip is a line;
+    // the second overlaps it. Each polygon row keeps only polygon parts:
+    // the line goes, and the second row's polygon piece stays
+    val polys = squares("id", (10, 0, 20, 10), (5, 5, 15, 15)).coalesce(1)
+    val clipped = graft.join.Clip.clip(polys, squares("m", (0, 0, 10, 10)), keepGeomType = true)
+    val rows = clipped.select(col("id"), st_geometrytype(col("geometry")), st_area(col("geometry")))
+      .as[(Int, String, Double)].collect().toSeq
+    assert(rows == Seq((1, "Polygon", 25.0)))
+    assert(!clipped.columns.contains("__graft_dim"))
+  }
+
   test("clip UDF evaluates once per row: the isNotNull filter must not inline it") {
     // the clip UDF (WKB decode + JTS clip) is referenced by the projection
     // AND the not-null filter; unfenced, PushDownPredicates inlined it into
